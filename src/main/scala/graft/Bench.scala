@@ -3,21 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing stays at its defaults DELIBERATELY: both
-      // parallelismFirst=false (64m and 4m advisory sizes) were measured
-      // and REJECTED — they throttle the LSH pair-shuffles (x08/x11) far
-      // more than they save on small-aggregate scheduling, net +15-25% on
-      // the suite. Measured on an idle host, not guessed.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // Warm the session before timing: JVM/classloading, parquet footer reads,
     // and one codegen'd scan+agg — so the first timed query doesn't absorb
     // ~5s of one-time startup cost that no steady-state deployment pays.

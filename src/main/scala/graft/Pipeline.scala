@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.clean.Silver
 import graft.gold.Gold
@@ -15,6 +16,13 @@ import graft.io.{Lake, Readers}
   * single named files — the silver contract is the schema, not the filename.
   * `ingestDate` is explicit (no today()-default: SURVEY.md §7.3.7).
   * Returns the reference's JSON summary shapes as strings.
+  *
+  * There is one path to gold: EP2, from the silver parquet. EP1 writes
+  * silver and then runs EP2, so both endpoints publish the same gold. Every
+  * output's row count is observed during its write (one job per output),
+  * and nothing is kept in memory across calls: each run reads the files as
+  * they are now, so a rewritten bronze file under the same `ingest_date` is
+  * never answered from an earlier run's frames.
   */
 class Pipeline(spark: SparkSession, base: String, ingestDate: String) {
 
@@ -36,18 +44,22 @@ class Pipeline(spark: SparkSession, base: String, ingestDate: String) {
     Silver.School.clean(readBronzeSchool()),
     Silver.SpecialEd.clean(readBronzeSpecial()))
 
-  private def summary(df: DataFrame, out: String): String =
-    s"""{"rows": ${df.count()}, "columns": ${df.columns.length}, "output_path": "$out"}"""
+  /** Write `df` to `out` and summarize it; `rows` is counted by an
+    * `Observation` during the write itself, not by a second job. */
+  private def write(df: DataFrame, out: String): String = {
+    val rows = Observation()
+    Lake.writeSingleFile(df.observe(rows, count(lit(1)).as("n")), out)
+    s"""{"rows": ${rows.get("n")}, "columns": ${df.columns.length}, "output_path": "$out"}"""
+  }
 
   /** EP1 first half — bronze → silver writes + JSON summary. */
   def runBronzeToSilver(): String = {
     val (housing, school, special) = buildSilverFrames()
-    val outs = Seq(
-      "housing" -> (housing, p("silver", "housing_affordability")),
-      "school" -> (school, p("silver", "school_performance")),
-      "special_education" -> (special, p("silver", "special_education")))
-    outs.foreach { case (_, (df, out)) => Lake.writeSingleFile(df, out) }
-    outs.map { case (name, (df, out)) => s""""$name": ${summary(df, out)}""" }
+    Seq(
+      "housing" -> write(housing, p("silver", "housing_affordability")),
+      "school" -> write(school, p("silver", "school_performance")),
+      "special_education" -> write(special, p("silver", "special_education")))
+      .map { case (name, json) => s""""$name": $json""" }
       .mkString("{", ", ", "}")
   }
 
@@ -58,31 +70,16 @@ class Pipeline(spark: SparkSession, base: String, ingestDate: String) {
       housing = Readers.parquet(spark, p("silver", "housing_affordability")),
       school = Readers.parquet(spark, p("silver", "school_performance")),
       special = Readers.parquet(spark, p("silver", "special_education")))
-    val out = p("gold", "county_analysis")
-    Lake.writeSingleFile(gold, out)
-    summary(gold, out)
+    write(gold, p("gold", "county_analysis"))
   }
 
-  /** EP1 — full pipeline: bronze → silver writes → gold from the SAME
-    * in-memory frames (no silver re-read; the frames are cached before the
-    * write+gold fan-out, the Spark spelling of the reference's in-memory
-    * reuse at bronze_to_silver.py:234-254). */
-  def runBronzeToSilverAndGold(): String = {
-    val (housing, school, special) = buildSilverFrames()
-    Seq(housing, school, special).foreach(_.cache())
-    val silverOuts = Seq(
-      "housing" -> (housing, p("silver", "housing_affordability")),
-      "school" -> (school, p("silver", "school_performance")),
-      "special_education" -> (special, p("silver", "special_education")))
-    silverOuts.foreach { case (_, (df, out)) => Lake.writeSingleFile(df, out) }
-    val gold = Gold.buildLeaJoinedGold(housing, school, special)
-    val goldOut = p("gold", "county_analysis")
-    Lake.writeSingleFile(gold, goldOut)
-    val silverJson = silverOuts
-      .map { case (name, (df, out)) => s""""$name": ${summary(df, out)}""" }
-      .mkString("{", ", ", "}")
-    s"""{"silver": $silverJson, "gold": {"county_joined": ${summary(gold, goldOut)}}}"""
-  }
+  /** EP1 — full pipeline: the silver writes, then EP2 over what they wrote.
+    * Gold is built from the silver parquet, not from the in-memory frames
+    * the reference reuses (bronze_to_silver.py:234-254): reading the same
+    * files gives both endpoints the same input partitioning and so the same
+    * `avg` summation order, and EP1 and EP2 publish bit-identical gold. */
+  def runBronzeToSilverAndGold(): String =
+    s"""{"silver": ${runBronzeToSilver()}, "gold": {"county_joined": ${runSilverToGold()}}}"""
 }
 
 /** CLI runners (X4 parity: the reference's `__main__` blocks). */
@@ -90,13 +87,7 @@ object Pipeline {
   def main(args: Array[String]): Unit = {
     val usage = "usage: Pipeline <bronze-to-silver|silver-to-gold|full> <base> <ingestDate>"
     require(args.length == 3, usage)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val pipe = new Pipeline(spark, args(1), args(2))
     val json = args(0) match {
       case "bronze-to-silver" => pipe.runBronzeToSilver()

@@ -1,22 +1,14 @@
 package graft
 // Scratch stage-level profiler (local diagnosis only; not part of the API).
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 object Prof {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("PROF_OHA_FALLBACK", "128"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
+    spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+      sys.env.getOrElse("PROF_OHA_FALLBACK", "128"))
     spark.sparkContext.setLogLevel("ERROR")
     // job/stage/task counters — decompose a query's wall time into
     // scheduling floors (many tiny stages) vs real task work

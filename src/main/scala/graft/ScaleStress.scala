@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale/saturation stress for the three near-dup kernels (r12 verdict ask
@@ -52,16 +52,8 @@ object ScaleStress {
     def wanted(leg: String): Boolean =
       if (leg == "lsh40x") only.contains(leg) // opt-in, never implicit
       else only.isEmpty || only.contains(leg)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.local()
     import spark.implicits._
     val base = Tables.load(spark, sfDir, "documents")
       .select($"doc_id".cast("long").as("doc_id"), $"text")

@@ -6,8 +6,6 @@ import java.nio.charset.StandardCharsets
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.spark.sql.SparkSession
-
 /** HTTP surface — reference X2 parity (`function_app.py:12-35` HttpExample
   * health check, `:38-73` process-bronze-to-silver trigger) on the JDK's
   * built-in HttpServer: zero added dependencies, and the handler SEMANTICS
@@ -84,14 +82,7 @@ class Serve(runPipeline: () => String) {
 object Serve {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: Serve <port> <base> <ingestDate>")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val pipe = new Pipeline(spark, args(1), args(2))
+    val pipe = new Pipeline(Session.local(), args(1), args(2))
     val port = new Serve(() => pipe.runBronzeToSilverAndGold()).start(args(0).toInt)
     println(s"""{"serving": $port}""")
     Thread.currentThread.join()

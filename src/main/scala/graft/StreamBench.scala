@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Streaming THROUGHPUT measurement (r13 verdict ask #6): the processors in
@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   */
 object StreamBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     val offeredRps = args.headOption.map(_.toInt).getOrElse(2000000)
     val runSeconds = if (args.length > 1) args(1).toInt else 45
     val nUsers = if (args.length > 2) args(2).toInt else 100000
@@ -39,17 +39,11 @@ object StreamBench {
     val only = if (args.length > 3) args(3).split(",").toSet else Set.empty[String]
     def wanted(leg: String): Boolean = only.isEmpty || only.contains(leg)
     val admRowsPerBatch = if (args.length > 4) args(4).toInt else 250000
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // recentProgress keeps only the last N batches (default 100); a 60 s
-      // run at sub-second triggers produces hundreds, and losing the early
-      // ones silently shifts the warmup cut and caps n_batches at 100
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
+    // recentProgress keeps only the last N batches (default 100); a 60 s
+    // run at sub-second triggers produces hundreds, and losing the early
+    // ones silently shifts the warmup cut and caps n_batches at 100
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
     import spark.implicits._
 
     val outRoot = s"target/streambench/${System.nanoTime()}"

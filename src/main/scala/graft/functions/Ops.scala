@@ -347,9 +347,6 @@ object Ops {
     new GenericArrayData(arr)
   }
 
-  /** Whole-document polynomial rolling hash (order-sensitive content id). */
-  def docHash(text: UTF8String): Long = fnv1a(text)
-
   // ---------------------------------------------------------------- vectors
   /** Cosine similarity of two float vectors; 0.0 for zero-norm inputs. */
   def cosine(a: ArrayData, b: ArrayData): Double = {
@@ -440,15 +437,6 @@ object Ops {
     var i = 0
     while (i < n) { dot += la(i) * lb(i); i += 1 }
     dot
-  }
-
-  /** L2 norm of a float vector. */
-  def normF(a: ArrayData): Double = {
-    val fa = a.toFloatArray()
-    var s = 0.0
-    var i = 0
-    while (i < fa.length) { s += fa(i).toDouble * fa(i); i += 1 }
-    math.sqrt(s)
   }
 
   /** Sign-bit bucket of a vector under `nbits` deterministic SplitMix64

@@ -56,11 +56,6 @@ object Multimodal {
     StructField("n_bytes", LongType),
     StructField("checksum", LongType)))
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType),
-    StructField("payload", BinaryType),
-    StructField("meta", mediaMetaType)))
-
   /** Wrap any table into the media schema, payload = utf-8 bytes of a text
     * column (the stand-in for real image/audio bytes in this container). */
   def attachBinary(df: DataFrame, idCol: String, textCol: String, mime: String): DataFrame =
@@ -1149,7 +1144,7 @@ object Multimodal {
     ftyp ++ moov
   }
 
-  /** The decode mode the pipeline will ACTUALLY take for one payload —
+  /** The decode mode [[codecSupport]] reports for one payload —
     * determined by attempting the real decoders, not by trusting the
     * format label:
     *  - `real`        — a bundled JDK codec fully decodes it
@@ -1163,14 +1158,10 @@ object Multimodal {
     *                    to the documented deterministic stub (text
     *                    stand-ins, junk, corrupt compressed media);
     *  - `null`        — NULL payload (an upstream stage's undecodable
-    *                    marker). */
-  def decodeMode(p: Array[Byte]): String =
-    decodeModeOf(p, decodeAudio(p), headerDurationMs(p))
-
-  /** The single copy of the mode ladder, over pre-computed audio/header
-    * results — [[codecSupport]] needs those values anyway (for
-    * duration_ms), and a second inline ladder there could drift from this
-    * one when the next header parser lands. */
+    *                    marker).
+    * The audio/header results come in pre-computed because
+    * [[codecSupport]] needs them anyway (for duration_ms); this is the
+    * single copy of the mode ladder. */
   private def decodeModeOf(p: Array[Byte], audio: Option[AudioStats],
       hdrDur: Option[Long]): String =
     if (p == null) "null"

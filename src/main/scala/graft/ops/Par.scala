@@ -30,25 +30,17 @@ private[graft] object Par {
   def widen(df: DataFrame): DataFrame = widenTo(df,
     df.sparkSession.sparkContext.defaultParallelism)
 
-  /** [[widen]] with an explicit target — for map stages whose serial cost
-    * is real but modest, where full defaultParallelism fan-out costs more
-    * in per-task/per-shuffle-block constants across every downstream stage
-    * than it recovers (measured r19: 32-way widening of a ~2000-row
-    * relation added ~10 ms × tasks × stages). Still only ever widens. */
-  /** Does this frame's PREPARED physical plan carry an exchange? Read from
-    * the plan inside the AQE wrapper: `sparkPlan` is pre-EnsureRequirements
-    * and never contains Exchange nodes, and the AdaptiveSparkPlanExec leaf
-    * hides its input from TreeNode traversal — both probes silently answer
-    * "no" for every plan (r19 bug). No job runs: preparation only plans. */
+  /** Does this frame's plan carry an exchange? Decided on the OPTIMIZED
+    * LOGICAL plan, because the physical probes all lie here: `sparkPlan` is
+    * pre-EnsureRequirements (no Exchange nodes yet) and
+    * AdaptiveSparkPlanExec hides its prepared plan from TreeNode traversal,
+    * so both answered "no" for every plan (r19 bug). Any operator below
+    * that requires a distribution plans an exchange (broadcast or shuffle);
+    * `false` is reserved for the scan-shaped plans
+    * (scan/filter/project/union/generate) the widen sites actually feed.
+    * No job runs. */
   private[graft] def hasExchange(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical._
-    // decided on the OPTIMIZED LOGICAL plan: the physical probes all lie
-    // here — `sparkPlan` is pre-EnsureRequirements (no Exchange nodes yet)
-    // and AdaptiveSparkPlanExec hides its prepared plan from TreeNode
-    // traversal. Any operator below that requires a distribution plans an
-    // exchange (broadcast or shuffle); `false` is reserved for the
-    // scan-shaped plans (scan/filter/project/union/generate) the widen
-    // sites actually feed.
     df.queryExecution.optimizedPlan.exists {
       case s: Sort => s.global
       case _: Aggregate | _: Join | _: Window | _: Distinct |
@@ -57,6 +49,11 @@ private[graft] object Par {
     }
   }
 
+  /** [[widen]] with an explicit target — for map stages whose serial cost
+    * is real but modest, where full defaultParallelism fan-out costs more
+    * in per-task/per-shuffle-block constants across every downstream stage
+    * than it recovers (measured r19: 32-way widening of a ~2000-row
+    * relation added ~10 ms × tasks × stages). Still only ever widens. */
   def widenTo(df: DataFrame, target: Int): DataFrame = {
     // Exchange-bearing plans are excluded for TWO reasons: (1) their
     // downstream partitioning is already shuffle.partitions-wide, so widen

@@ -100,40 +100,6 @@ object Similarity {
   private def nearestCell(vec: Column, centroids: Array[(Int, Array[Float])]): Column =
     -(array_max(centroidScores(vec, centroids)).getField("ncid"))
 
-  /** Coarse centroids via deterministic Lloyd iterations: seeds are the
-    * `nlist` lowest-id vectors, then `iters` rounds of
-    * assign(map-side) → mean(one shuffle) with only the tiny centroid set
-    * collected per round — the standard IVF training loop, seeded
-    * deterministically instead of k-means++ randomness. */
-  def coarseCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-      nlist: Int, iters: Int = 3): Array[(Int, Array[Float])] = {
-    val base = corpus.select(col(idCol).as("item_id"), col(vecCol).as("item_vec"))
-    base.cache()
-    var centroids = base.orderBy(col("item_id")).limit(nlist)
-      .select(col("item_vec").as("centroid"))
-      .collect().map(_.getSeq[Float](0).toArray).zipWithIndex
-      .map { case (v, i) => (i, v) }
-    for (_ <- 1 to iters) {
-      // per-cell mean vector (element-wise) — one shuffle of (cell, pos, v)
-      val means = base
-        .select(nearestCell(col("item_vec"), centroids).as("centroid_id"),
-          posexplode(col("item_vec")))
-        .groupBy(col("centroid_id"), col("pos"))
-        .agg(avg(col("col")).as("m"))
-        .collect().groupBy(_.getInt(0))
-        .map { case (cid, rows) =>
-          val dim = rows.map(_.getInt(1)).max + 1
-          val v = new Array[Float](dim)
-          rows.foreach(r => v(r.getInt(1)) = r.getDouble(2).toFloat)
-          (cid, v)
-        }
-      // empty cells keep their previous centroid
-      centroids = centroids.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
-    }
-    base.unpersist()
-    centroids
-  }
-
   /** Assign every corpus vector to its nearest centroid — pure map-side
     * expression (the "write-time" step of a real IVF index build). */
   def assignCells(corpus: DataFrame, centroids: Array[(Int, Array[Float])],

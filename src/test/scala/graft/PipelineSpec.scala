@@ -2,16 +2,22 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+
 import graft.io.Readers
 
 /** End-to-end bronze→silver→gold pipeline parity on the FIXTURES.md A-family
   * fixtures, asserting the §7.3 semantic traps. */
 class PipelineSpec extends SparkSpec {
 
-  private lazy val base: String = {
+  private val date = "2024-01-15"
+
+  /** A fresh bronze lake in a temp dir: the CSVs come from test resources,
+    * the XLSX is generated. */
+  private def stageLake(): String = {
     val dir = Files.createTempDirectory("graft-pipe").toString
-    // bronze CSVs come from test resources; the XLSX is generated
-    val date = "2024-01-15"
     def copy(rel: String): Unit = {
       val src = Paths.get(resourcePath(rel))
       val dst = Paths.get(s"$dir/$rel")
@@ -25,7 +31,11 @@ class PipelineSpec extends SparkSpec {
     dir
   }
 
-  private lazy val pipe = new Pipeline(spark, base, "2024-01-15")
+  private lazy val base: String = stageLake()
+
+  private lazy val pipe = new Pipeline(spark, base, date)
+
+  private val mapper = new ObjectMapper()
 
   test("silver housing: label-row filter, coerce, fillna+rowsum, guarded division") {
     val (housing, _, _) = pipe.buildSilverFrames()
@@ -93,14 +103,56 @@ class PipelineSpec extends SparkSpec {
       "total_cost_burden_30_plus_pct"))
   }
 
+  /** Assert that a `{"rows", "columns", "output_path"}` summary describes
+    * the parquet it names. */
+  private def assertSummary(summary: JsonNode): Unit = {
+    val written = Readers.parquet(spark, summary.get("output_path").asText)
+    assert(summary.get("rows").asLong == written.count(), summary.toString)
+    assert(summary.get("columns").asInt == written.columns.length, summary.toString)
+  }
+
   test("EP1 full run writes silver+gold parquet and returns the JSON summary shape") {
-    val json = pipe.runBronzeToSilverAndGold()
-    assert(json.contains("\"silver\"") && json.contains("\"gold\""))
-    assert(json.contains("\"county_joined\""))
-    val gold = Readers.parquet(spark, s"$base/gold/county_analysis/ingest_date=2024-01-15")
-    assert(gold.count() == 5)
+    val json = mapper.readTree(pipe.runBronzeToSilverAndGold())
+    assert(json.fieldNames.asScala.toSeq == Seq("silver", "gold"))
+    val silver = json.get("silver")
+    assert(silver.fieldNames.asScala.toSeq == Seq("housing", "school", "special_education"))
+    assert(json.get("gold").fieldNames.asScala.toSeq == Seq("county_joined"))
+    val goldSummary = json.get("gold").get("county_joined")
+    (silver.elements.asScala.toSeq :+ goldSummary).foreach(assertSummary)
+    val goldPath = s"$base/gold/county_analysis/ingest_date=$date"
+    assert(goldSummary.get("output_path").asText == goldPath)
+    val ep1Written = Readers.parquet(spark, goldPath)
+    assert(ep1Written.count() == 5)
+    // held in memory: EP2 overwrites the same path
+    val ep1Gold = spark.createDataFrame(ep1Written.collectAsList(), ep1Written.schema)
     // EP2: rebuild gold from the silver parquet contract — same result
-    val json2 = pipe.runSilverToGold()
-    assert(json2.contains("\"rows\": 5"))
+    val json2 = mapper.readTree(pipe.runSilverToGold())
+    assert(json2.get("rows").asLong == 5)
+    assertSummary(json2)
+    val ep2Gold = Readers.parquet(spark, goldPath)
+    assert(ep2Gold.schema == ep1Gold.schema)
+    assert(ep1Gold.exceptAll(ep2Gold).isEmpty && ep2Gold.exceptAll(ep1Gold).isEmpty)
+  }
+
+  test("EP1 re-reads bronze on every call and leaves nothing persisted") {
+    val lake = stageLake()
+    val fresh = new Pipeline(spark, lake, date)
+    val csv = Paths.get(s"$lake/bronze/housing_affordability/ingest_date=$date/housing2019-23.csv")
+    def housing(json: String): JsonNode = mapper.readTree(json).get("silver").get("housing")
+    def persisted: Int = spark.sparkContext.getPersistentRDDs.size
+    val before = persisted
+    assert(housing(fresh.runBronzeToSilverAndGold()).get("rows").asLong == 7)
+    val after = persisted
+    assert(after == before, "EP1 must not leave persisted RDDs behind")
+
+    // same ingest_date, fewer rows: header + label row + the first 3 counties
+    val lines = Files.readAllLines(csv)
+    Files.write(csv, lines.subList(0, 5))
+    val rerun = housing(fresh.runBronzeToSilverAndGold())
+    assert(rerun.get("rows").asLong == 3, "EP1 must report the rewritten bronze file")
+    val silverHousing = Readers.parquet(spark, s"$lake/silver/housing_affordability/ingest_date=$date")
+    assert(silverHousing.count() == 3, "EP1 must write the rewritten bronze file")
+    val afterRerun = persisted
+    assert(afterRerun == before)
   }
 }
