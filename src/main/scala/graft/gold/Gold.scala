@@ -39,8 +39,17 @@ object Gold {
   }
 
   /** Full gold build. All three inputs are county/LEA-cardinality marts, so
-    * both joins broadcast (no shuffle of anything at any realistic scale of
-    * this dataset family); the rollup is the only exchange. */
+    * both joins broadcast and neither join shuffles. Built and written, the
+    * plan has three exchanges and runs six jobs (under AQE each shuffle
+    * stage and each broadcast is a job of its own):
+    *  - two shuffle stages of the rollup: `countDistinct(school_id)` groups
+    *    by LEA and `school_id` to drop duplicate schools, then by LEA to
+    *    aggregate; an LEA's rows must meet in one task to be counted once;
+    *  - the shuffle by county of [[housingPerCounty]]'s keep-first window,
+    *    which must see all of a county's rows;
+    *  - two broadcast builds, the special-ed side of J1 and the housing side
+    *    of J3; a shuffle join instead would add a stage per side;
+    *  - the write. */
   def buildLeaJoinedGold(housing: DataFrame, school: DataFrame, special: DataFrame): DataFrame = {
     // normalize join keys — silver_to_gold.py:52-60
     val housingKeyed = housing.withColumn("county", Normalize.normalizeCounty(col("county_name")))

@@ -1,6 +1,16 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.io.{BufferedReader, InputStream, InputStreamReader}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.util.control.NonFatal
+
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -12,37 +22,84 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * S3: XLSX — no built-in and no external package in this offline build;
   *     minimal JDK-only reader in [[Xlsx]].
   * S4: parquet (spark.read.parquet).
+  *
+  * Calling S1, S2 or S4 launches no Spark job: a CSV header or a parquet
+  * footer is read on the driver and handed to the scan as its schema,
+  * instead of by the one-task inference job `spark.read` runs on every
+  * call. The scan of the data stays in Spark.
   */
 object Readers {
 
   /** S1 — CSV scan, header row 0. All-string schema unless one is given:
     * type coercion is an explicit silver-layer step (try_cast), mirroring
-    * the reference's pd.to_numeric(errors="coerce") and keeping bronze raw. */
+    * the reference's pd.to_numeric(errors="coerce") and keeping bronze raw.
+    *
+    * With no schema, the header of a single file is read on the driver
+    * ([[csvHeaderSchema]]); for a directory, a glob, a hidden or empty file
+    * or a missing path Spark infers it (one job), as before. */
   def csv(spark: SparkSession, path: String, schema: Option[StructType] = None): DataFrame = {
     val r = spark.read.option("header", "true")
-    schema match {
-      case Some(s) => r.schema(s).csv(path)
-      case None    => r.csv(path)
-    }
+    schema.orElse(csvHeaderSchema(spark, path)).fold(r.csv(path))(r.schema(_).csv(path))
+  }
+
+  /** The all-string schema Spark's header inference gives `path` when it is
+    * one visible file: its first line holding a character other than a
+    * space, split by Spark's own tokenizer and named by Spark's
+    * `makeSafeHeader` (`_c<i>` for an empty cell, the index appended to a
+    * duplicate name). `None` where that could differ from Spark's result. */
+  private def csvHeaderSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = GraftBridge.sqlConf(spark)
+    val opts = new CSVOptions(Map("header" -> "true"), conf.csvColumnPruning,
+      conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    val name = new Path(path).getName
+    if (name.startsWith("_") || name.startsWith(".")) None
+    else try {
+      readLines(spark, path)(_.find(_.exists(_ != ' ')))
+        .flatMap(line => Option(new CsvParser(opts.asParserSettings).parseLine(line)))
+        .map(cells => StructType(CSVUtils.makeSafeHeader(cells, conf.caseSensitiveAnalysis, opts)
+          .map(StructField(_, StringType, nullable = true))))
+    } catch { case NonFatal(_) => None }
+  }
+
+  /** Apply `f` to the lines of the one file at `path`, read on the driver
+    * through the Hadoop `FileSystem` the way Spark's text scan reads them:
+    * decompressed by file extension, split at `\n`, `\r` or `\r\n`, UTF-8,
+    * and a byte-order mark at the start dropped. Fails on a directory, a
+    * glob or a missing path. */
+  private def readLines[T](spark: SparkSession, path: String)(f: Iterator[String] => T): T = {
+    val conf = GraftBridge.hadoopConf(spark)
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    require(fs.getFileStatus(p).isFile, s"$path is not a file")
+    val raw = fs.open(p)
+    val codec = Option(new CompressionCodecFactory(conf).getCodec(p))
+    val in = new BufferedReader(new InputStreamReader(
+      codec.fold[InputStream](raw)(_.createInputStream(raw)), UTF_8))
+    try {
+      val lines = Iterator.continually(in.readLine()).takeWhile(_ != null)
+      f(lines.zipWithIndex.map { case (l, i) => if (i == 0) l.stripPrefix("\uFEFF") else l })
+    } finally in.close()
   }
 
   /** S2 — CSV whose header sits at line index `headerRow` (0-based), with
     * free-text metadata lines above it (`bronze_to_silver.py:57-58`,
     * header=4).
     *
-    * Implementation: read as text, number lines with `zipWithIndex` — for a
-    * single input file the partitions are ordered by byte offset, so the
-    * index is the file line number and this stays correct and parallel for
-    * arbitrarily large files (no single-partition coalesce). The header line
-    * is fetched by index, then data lines parse via `from_csv` with an
-    * all-string schema named after the header. */
+    * Implementation: the header is line `headerRow` of the file, read on the
+    * driver ([[readLines]]). The data is read as text and numbered with
+    * `zipWithIndex` — for a single input file the partitions are ordered by
+    * byte offset, so the index is the file line number and this stays
+    * correct and parallel for arbitrarily large files (no single-partition
+    * coalesce); `zipWithIndex` sizes the partitions with a job of its own
+    * only when the file spans more than one. Data lines parse via
+    * `from_csv` with an all-string schema named after the header. */
   def csvWithHeaderOffset(spark: SparkSession, path: String, headerRow: Int = 4): DataFrame = {
     import spark.implicits._
-    val lines = spark.read.textFile(path).rdd.zipWithIndex()
-    val headerLine = lines.filter(_._2 == headerRow).map(_._1).collect().headOption
+    val headerLine = readLines(spark, path)(_.drop(headerRow).nextOption())
       .getOrElse(throw new IllegalArgumentException(
         s"$path has fewer than ${headerRow + 1} lines — no header to read"))
     val names = parseCsvLine(headerLine)
+    val lines = spark.read.textFile(path).rdd.zipWithIndex()
     val data = lines.filter(_._2 > headerRow).map(_._1).toDF("line")
     val schema = StructType(names.map(n => StructField(n, StringType, nullable = true)))
     data
@@ -89,6 +146,12 @@ object Readers {
     spark.createDataFrame(spark.sparkContext.parallelize(data.toSeq), schema)
   }
 
-  /** S4 — parquet scan. */
-  def parquet(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
+  /** S4 — parquet scan, its schema read from one footer on the driver
+    * ([[GraftBridge.parquetFooterSchema]]). Spark infers it instead (one
+    * job) when `mergeSchema` is on, for a partitioned directory or one with
+    * a summary file, and for a path with no data file, so those get Spark's
+    * own result or error. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    GraftBridge.parquetFooterSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 }

@@ -5,31 +5,17 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.scalatest.Checkpoints
+
+import org.apache.spark.JobCounter
 
 import graft.io.Readers
 
 /** End-to-end bronze→silver→gold pipeline parity on the FIXTURES.md A-family
   * fixtures, asserting the §7.3 semantic traps. */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with Checkpoints {
 
-  private val date = "2024-01-15"
-
-  /** A fresh bronze lake in a temp dir: the CSVs come from test resources,
-    * the XLSX is generated. */
-  private def stageLake(): String = {
-    val dir = Files.createTempDirectory("graft-pipe").toString
-    def copy(rel: String): Unit = {
-      val src = Paths.get(resourcePath(rel))
-      val dst = Paths.get(s"$dir/$rel")
-      Files.createDirectories(dst.getParent)
-      Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING)
-    }
-    copy(s"bronze/housing_affordability/ingest_date=$date/housing2019-23.csv")
-    copy(s"bronze/special_education/ingest_date=$date/special_education2022-23.csv")
-    TestXlsx.writeSchoolFixture(new java.io.File(
-      s"$dir/bronze/school_performance/ingest_date=$date/school_performance.xlsx"))
-    dir
-  }
+  import PipelineSpec.{date, stageLake}
 
   private lazy val base: String = stageLake()
 
@@ -134,6 +120,25 @@ class PipelineSpec extends SparkSpec {
     assert(ep1Gold.exceptAll(ep2Gold).isEmpty && ep2Gold.exceptAll(ep1Gold).isEmpty)
   }
 
+  test("EP1 runs in at most 9 jobs, EP2 in at most 6, and the readers launch none") {
+    val fresh = new Pipeline(spark, stageLake(), date)
+    def jobs[T](body: => T): (T, Int) = JobCounter.count(spark.sparkContext)(body)
+    val pins = new Checkpoint // every pin is reported, not just the first to fail
+    // EP1: one write per silver output, then EP2; no schema or header job
+    val (summary, ep1) = jobs(fresh.runBronzeToSilverAndGold())
+    pins { assert(ep1 <= 9, s"EP1 ran $ep1 jobs") }
+    // EP2: the gold build and its write (see Gold.buildLeaJoinedGold)
+    val (_, ep2) = jobs(fresh.runSilverToGold())
+    pins { assert(ep2 <= 6, s"EP2 ran $ep2 jobs") }
+    // Readers.csv and Readers.csvWithHeaderOffset (bronze), Readers.parquet
+    // (each silver output and gold)
+    pins { assert(jobs(fresh.readBronzeHousing())._2 == 0, "Readers.csv") }
+    pins { assert(jobs(fresh.readBronzeSpecial())._2 == 0, "Readers.csvWithHeaderOffset") }
+    for (out <- mapper.readTree(summary).findValues("output_path").asScala)
+      pins { assert(jobs(Readers.parquet(spark, out.asText))._2 == 0, out.asText) }
+    pins.reportAll()
+  }
+
   test("EP1 re-reads bronze on every call and leaves nothing persisted") {
     val lake = stageLake()
     val fresh = new Pipeline(spark, lake, date)
@@ -154,5 +159,26 @@ class PipelineSpec extends SparkSpec {
     assert(silverHousing.count() == 3, "EP1 must write the rewritten bronze file")
     val afterRerun = persisted
     assert(afterRerun == before)
+  }
+}
+
+object PipelineSpec {
+  val date = "2024-01-15"
+
+  /** A fresh bronze lake in a temp dir: the CSVs come from test resources,
+    * the XLSX is generated. */
+  def stageLake(): String = {
+    val dir = Files.createTempDirectory("graft-pipe").toString
+    def copy(rel: String): Unit = {
+      val src = Paths.get(getClass.getClassLoader.getResource(rel).toURI)
+      val dst = Paths.get(s"$dir/$rel")
+      Files.createDirectories(dst.getParent)
+      Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING)
+    }
+    copy(s"bronze/housing_affordability/ingest_date=$date/housing2019-23.csv")
+    copy(s"bronze/special_education/ingest_date=$date/special_education2022-23.csv")
+    TestXlsx.writeSchoolFixture(new java.io.File(
+      s"$dir/bronze/school_performance/ingest_date=$date/school_performance.xlsx"))
+    dir
   }
 }

@@ -1,12 +1,59 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.JobCounter
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructType}
 
 import graft.io.{Readers, Xlsx}
 
-/** Source operators S1–S3 (SURVEY.md §2.1). */
+/** Source operators S1–S4 (SURVEY.md §2.1). */
 class ReadersSpec extends SparkSpec {
+
+  /** A read's schema, or its error's class and message. */
+  private def outcome(read: => StructType): Either[(Class[_], String), StructType] =
+    Try(read).toEither.left.map(e => (e.getClass, e.getMessage))
+
+  /** Asserts `Readers.parquet` gives `spark.read.parquet`'s schema, or its
+    * error; returns the number of jobs the `Readers` call launched. */
+  private def parquetParity(path: String): Int = {
+    val (ours, jobs) =
+      JobCounter.count(spark.sparkContext)(outcome(Readers.parquet(spark, path).schema))
+    assert(ours == outcome(spark.read.parquet(path).schema), path)
+    jobs
+  }
+
+  /** Asserts `Readers.csv` gives Spark's header-inferred schema and the
+    * same rows; returns the number of jobs the `Readers` call launched. */
+  private def csvParity(path: String): Int = {
+    val (ours, jobs) = JobCounter.count(spark.sparkContext)(Readers.csv(spark, path))
+    val theirs = spark.read.option("header", "true").csv(path)
+    assert(ours.schema == theirs.schema, path)
+    assert(ours.collect().toSeq == theirs.collect().toSeq, path)
+    jobs
+  }
+
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  private def tempCsv(content: String): String = {
+    val f = Files.createTempFile("graft", ".csv")
+    Files.write(f, content.getBytes(UTF_8))
+    f.toString
+  }
 
   test("S2: csvWithHeaderOffset skips 4 metadata lines, header at row 4") {
     val path = resourcePath(
@@ -129,5 +176,92 @@ class ReadersSpec extends SparkSpec {
       assert(emb.schema("embedding").dataType == ArrayType(FloatType, containsNull = true))
       assert(emb.schema("label").dataType == IntegerType)
     }
+  }
+
+  test("S1: driver-read CSV header matches Spark's inference") {
+    assert(csvParity(resourcePath(
+      "bronze/housing_affordability/ingest_date=2024-01-15/housing2019-23.csv")) == 0)
+    assert(csvParity(tempCsv("a,,c\n1,2,3\n")) == 0)             // empty cell: _c1
+    assert(csvParity(tempCsv("a,b,A,a\n1,2,3,4\n")) == 0)        // duplicates, any case
+    assert(csvParity(tempCsv("\uFEFFid,name\n1,x\n")) == 0)      // UTF-8 byte-order mark
+    assert(csvParity(tempCsv("\n   \n\"q,1\",\"\"\"r\"\"\"\r\n1,2\r\n")) == 0) // blank lines, quotes, CRLF
+    csvParity(tempCsv(""))                                        // zero bytes: Spark infers
+    assert(Readers.csv(spark, tempCsv("a,,c\n")).columns.toSeq == Seq("a", "_c1", "c"))
+    assert(Readers.csv(spark, tempCsv("a,b,A\n")).columns.toSeq == Seq("a0", "b", "A2"))
+    assert(Readers.csv(spark, tempCsv("\uFEFFid\n")).columns.toSeq == Seq("id"))
+    assert(Readers.csv(spark, tempCsv("")).schema == new StructType())
+  }
+
+  test("S4: footer schema matches Spark's inference on silver, gold and sf0.01") {
+    val base = PipelineSpec.stageLake()
+    new Pipeline(spark, base, PipelineSpec.date).runBronzeToSilverAndGold()
+    for (layer <- Seq("silver", "gold"); dataset <- new File(s"$base/$layer").list())
+      assert(parquetParity(graft.io.Lake.path(base, layer, dataset, PipelineSpec.date)) == 0)
+    val sf = "/root/testdata/sf0.01"
+    for (name <- Tables.names) assert(parquetParity(s"$sf/$name.parquet") == 0)
+    for (nanosAsLong <- Seq("true", "false"))
+      withConf("spark.sql.legacy.parquet.nanosAsLong" -> nanosAsLong) {
+        assert(parquetParity(s"$sf/events.parquet") == 0)
+      }
+  }
+
+  test("S4: footer schema follows nanosAsLong and binaryAsString as Spark does") {
+    // written without Spark's schema metadata, so the session conf decides
+    val dir = Files.createTempDirectory("graft-nanos")
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 ts (TIMESTAMP(NANOS,true)); required binary raw; }")
+    val writer = ExampleParquetWriter.builder(new Path(s"$dir/part-0.parquet"))
+      .withType(schema).build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup()
+      .append("ts", 1704164645123456789L).append("raw", Binary.fromString("x")))
+    finally writer.close()
+    for (nanosAsLong <- Seq("true", "false"); binaryAsString <- Seq("true", "false"))
+      withConf("spark.sql.legacy.parquet.nanosAsLong" -> nanosAsLong,
+          "spark.sql.parquet.binaryAsString" -> binaryAsString) {
+        val jobs = parquetParity(dir.toString)
+        if (nanosAsLong == "true") {
+          assert(jobs == 0)
+          val fields = Readers.parquet(spark, dir.toString).schema
+          assert(fields("ts").dataType == LongType)
+          assert(fields("raw").dataType == (if (binaryAsString == "true") StringType else BinaryType))
+        }
+      }
+    // off, both reads refuse TIMESTAMP(NANOS) with Spark's error
+    withConf("spark.sql.legacy.parquet.nanosAsLong" -> "false") {
+      assert(outcome(Readers.parquet(spark, dir.toString).schema).isLeft)
+    }
+  }
+
+  test("S4: mergeSchema, partitions, summary files and empty dirs get Spark's answer") {
+    import spark.implicits._
+    def tmp(): String = Files.createTempDirectory("graft-pq").toString
+    // two files with different columns in one directory
+    val mixed = tmp()
+    Seq(1L).toDF("a").write.mode("overwrite").parquet(mixed)
+    Seq("x").toDF("b").write.mode("append").parquet(mixed)
+    assert(parquetParity(mixed) == 0) // the first file by path, as Spark picks
+    withConf("spark.sql.parquet.mergeSchema" -> "true") {
+      assert(parquetParity(mixed) == 1)
+      assert(Readers.parquet(spark, mixed).columns.sorted.toSeq == Seq("a", "b"))
+    }
+    // partition discovery adds the partition column
+    val parted = tmp()
+    Seq((1L, "p"), (2L, "q")).toDF("v", "k").write.mode("overwrite").partitionBy("k").parquet(parted)
+    assert(parquetParity(parted) == 1)
+    assert(Readers.parquet(spark, parted).columns.toSeq == Seq("v", "k"))
+    // a summary file wins over the data files in Spark's inference
+    val summarized = tmp()
+    Seq(1L).toDF("a").write.mode("overwrite").parquet(summarized)
+    val other = tmp()
+    Seq(("x", 2.0)).toDF("s", "d").coalesce(1).write.mode("overwrite").parquet(other)
+    val otherFile = new File(other).listFiles().find(_.getName.endsWith(".parquet")).get
+    Files.copy(otherFile.toPath, Paths.get(s"$summarized/_common_metadata"))
+    assert(parquetParity(summarized) == 1)
+    assert(Readers.parquet(spark, summarized).columns.toSeq == Seq("s", "d"))
+    // no data file, and no path at all: Spark's own errors
+    val empty = tmp()
+    parquetParity(empty)
+    assert(outcome(Readers.parquet(spark, empty).schema).isLeft)
+    parquetParity(s"$empty/missing")
   }
 }
