@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import java.util.concurrent.{CompletionException, Executors}
+
+import scala.util.{Failure, Try}
+
+import org.apache.spark.sql.{DataFrame, GraftBridge, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
 import graft.clean.Silver
@@ -18,11 +22,13 @@ import graft.io.{Lake, Readers}
   * Returns the reference's JSON summary shapes as strings.
   *
   * There is one path to gold: EP2, from the silver parquet. EP1 writes
-  * silver and then runs EP2, so both endpoints publish the same gold. Every
-  * output's row count is observed during its write (one job per output),
-  * and nothing is kept in memory across calls: each run reads the files as
-  * they are now, so a rewritten bronze file under the same `ingest_date` is
-  * never answered from an earlier run's frames.
+  * silver and then runs EP2, so both endpoints publish the same gold. The
+  * three silver outputs are independent, so EP1 reads, cleans and writes
+  * them at once, one thread each, and waits for all three before gold.
+  * Every output's row count is observed during its write (one job per
+  * output), and nothing is kept in memory across calls: each run reads the
+  * files as they are now, so a rewritten bronze file under the same
+  * `ingest_date` is never answered from an earlier run's frames.
   */
 class Pipeline(spark: SparkSession, base: String, ingestDate: String) {
 
@@ -52,14 +58,47 @@ class Pipeline(spark: SparkSession, base: String, ingestDate: String) {
     s"""{"rows": ${rows.get("n")}, "columns": ${df.columns.length}, "output_path": "$out"}"""
   }
 
-  /** EP1 first half — bronze → silver writes + JSON summary. */
+  /** EP1 first half — bronze → silver writes + JSON summary, keys in the
+    * order housing, school, special_education.
+    *
+    * Each output is one unit (read, clean, write), and the three run at once
+    * on a pool of three threads made for the call; the XLSX parse, which
+    * runs on the driver, overlaps the two CSV writes. Each unit is submitted
+    * with the caller's active session and a copy of the caller's local
+    * properties ([[GraftBridge.withThreadLocalCaptured]]), so its jobs carry
+    * the caller's job group, description and any key the caller set:
+    * cancelling the group cancels them, and listeners attribute them to the
+    * call. The call returns or throws only once all three units have ended,
+    * so none of its jobs is still running after it. If units fail, the
+    * first failure in output order is thrown as the unit threw it, and the
+    * others are attached to it as suppressed.
+    *
+    * There is no setting for the thread count: the pool is as large as the
+    * number of outputs, and each output is one single-task write job, so
+    * fewer threads only wait longer and more have nothing to run. */
   def runBronzeToSilver(): String = {
-    val (housing, school, special) = buildSilverFrames()
-    Seq(
-      "housing" -> write(housing, p("silver", "housing_affordability")),
-      "school" -> write(school, p("silver", "school_performance")),
-      "special_education" -> write(special, p("silver", "special_education")))
-      .map { case (name, json) => s""""$name": $json""" }
+    val outputs = Seq(
+      ("housing", "housing_affordability", () => Silver.Housing.clean(readBronzeHousing())),
+      ("school", "school_performance", () => Silver.School.clean(readBronzeSchool())),
+      ("special_education", "special_education", () => Silver.SpecialEd.clean(readBronzeSpecial())))
+    val pool = Executors.newFixedThreadPool(outputs.size)
+    val ends =
+      try outputs
+        .map { case (_, dataset, frame) =>
+          GraftBridge.withThreadLocalCaptured(spark, pool)(write(frame(), p("silver", dataset)))
+        }
+        .map(unit => Try(unit.join())) // join: waits for every unit, interrupted or not
+      finally pool.shutdown()
+    val failures = ends.collect {
+      case Failure(e: CompletionException) if e.getCause != null => e.getCause
+      case Failure(e) => e
+    }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
+    outputs.zip(ends)
+      .map { case ((name, _, _), json) => s""""$name": ${json.get}""" }
       .mkString("{", ", ", "}")
   }
 

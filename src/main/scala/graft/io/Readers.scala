@@ -132,9 +132,14 @@ object Readers {
     out.toSeq
   }
 
-  /** S3 — XLSX scan (first sheet, row 0 = header), all-string columns. */
+  /** S3 — XLSX scan (first sheet, row 0 = header), all-string columns. The
+    * workbook is parsed on the driver, opened through the Hadoop
+    * `FileSystem` of `path` like the other readers, so a `file:` or
+    * `abfss:` base reads it too. */
   def xlsx(spark: SparkSession, path: String): DataFrame = {
-    val rows = Xlsx.readSheet(new java.io.File(path))
+    val p = new Path(path)
+    val in = p.getFileSystem(GraftBridge.hadoopConf(spark)).open(p)
+    val rows = try Xlsx.readSheet(in, path, Xlsx.MaxEntryBytes) finally in.close()
     if (rows.isEmpty)
       return spark.createDataFrame(new java.util.ArrayList[Row](), StructType(Nil))
     val header = rows.head.map(h => Option(h).getOrElse("").trim)

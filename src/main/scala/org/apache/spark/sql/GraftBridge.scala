@@ -1,5 +1,7 @@
 package org.apache.spark.sql
 
+import java.util.concurrent.{CompletableFuture, ExecutorService}
+
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
@@ -10,6 +12,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -68,6 +71,14 @@ object GraftBridge {
     * session's own settings. */
   def hadoopConf(spark: SparkSession): Configuration =
     spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
+  /** Run `body` on `exec` the way AQE submits its stages: with the
+    * caller's active session and a copy of the caller's local properties
+    * (job group, job description, scheduler pool and any caller-set key),
+    * so every job `body` launches belongs to the caller's group. */
+  def withThreadLocalCaptured[T](spark: SparkSession, exec: ExecutorService)(
+      body: => T): CompletableFuture[T] =
+    SQLExecution.withThreadLocalCaptured(spark.asInstanceOf[classic.SparkSession], exec)(body)
 
   /** The schema `spark.read.parquet(path)` infers, read from one footer on
     * the driver instead of by Spark's inference job. Spark's non-merging

@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.io.FileNotFoundException
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -15,7 +16,7 @@ import graft.io.Readers
   * fixtures, asserting the §7.3 semantic traps. */
 class PipelineSpec extends SparkSpec with Checkpoints {
 
-  import PipelineSpec.{date, stageLake}
+  import PipelineSpec.{bronze, date, stageLake}
 
   private lazy val base: String = stageLake()
 
@@ -120,16 +121,18 @@ class PipelineSpec extends SparkSpec with Checkpoints {
     assert(ep1Gold.exceptAll(ep2Gold).isEmpty && ep2Gold.exceptAll(ep1Gold).isEmpty)
   }
 
-  test("EP1 runs in at most 9 jobs, EP2 in at most 6, and the readers launch none") {
+  test("EP1 runs exactly 9 jobs, EP2 exactly 6, and the readers launch none") {
     val fresh = new Pipeline(spark, stageLake(), date)
     def jobs[T](body: => T): (T, Int) = JobCounter.count(spark.sparkContext)(body)
     val pins = new Checkpoint // every pin is reported, not just the first to fail
-    // EP1: one write per silver output, then EP2; no schema or header job
+    // EP1: one write per silver output, then EP2; no schema or header job.
+    // The silver writes run on worker threads: a thread that dropped the
+    // caller's job group would leave them out of this count
     val (summary, ep1) = jobs(fresh.runBronzeToSilverAndGold())
-    pins { assert(ep1 <= 9, s"EP1 ran $ep1 jobs") }
+    pins { assert(ep1 == 9, s"EP1 ran $ep1 jobs") }
     // EP2: the gold build and its write (see Gold.buildLeaJoinedGold)
     val (_, ep2) = jobs(fresh.runSilverToGold())
-    pins { assert(ep2 <= 6, s"EP2 ran $ep2 jobs") }
+    pins { assert(ep2 == 6, s"EP2 ran $ep2 jobs") }
     // Readers.csv and Readers.csvWithHeaderOffset (bronze), Readers.parquet
     // (each silver output and gold)
     pins { assert(jobs(fresh.readBronzeHousing())._2 == 0, "Readers.csv") }
@@ -137,6 +140,59 @@ class PipelineSpec extends SparkSpec with Checkpoints {
     for (out <- mapper.readTree(summary).findValues("output_path").asScala)
       pins { assert(jobs(Readers.parquet(spark, out.asText))._2 == 0, out.asText) }
     pins.reportAll()
+  }
+
+  test("every EP1 job carries the caller's local properties") {
+    val sc = spark.sparkContext
+    val fresh = new Pipeline(spark, stageLake(), date)
+    val key = "graft.test.caller"
+    sc.setLocalProperty(key, "ep1")
+    val (_, jobs) =
+      try JobCounter.jobs(sc)(fresh.runBronzeToSilverAndGold())
+      finally sc.setLocalProperty(key, null)
+    assert(jobs.size == 9)
+    val lost = jobs.filter(_.properties.getProperty(key) != "ep1").map(_.id)
+    assert(lost.isEmpty, s"jobs $lost ran without the caller's '$key'")
+  }
+
+  test("EP1 over a file:// base reads the XLSX and writes what a plain path writes") {
+    val plain = mapper.readTree(new Pipeline(spark, stageLake(), date).runBronzeToSilverAndGold())
+    val uriBase = s"file://${stageLake()}"
+    val uri = mapper.readTree(new Pipeline(spark, uriBase, date).runBronzeToSilverAndGold())
+    val school = uri.get("silver").get("school")
+    assert(school.get("output_path").asText.startsWith(s"$uriBase/silver/school_performance/"))
+    for (out <- Seq("housing", "school", "special_education"))
+      assert(uri.get("silver").get(out).get("rows") == plain.get("silver").get(out).get("rows"), out)
+    def gold(json: JsonNode) =
+      Readers.parquet(spark, json.get("gold").get("county_joined").get("output_path").asText)
+    assert(gold(uri).schema == gold(plain).schema)
+    assert(gold(uri).exceptAll(gold(plain)).isEmpty && gold(plain).exceptAll(gold(uri)).isEmpty)
+  }
+
+  test("EP1 with a missing bronze file: the other outputs are written, then it throws") {
+    val lake = stageLake()
+    val special = bronze(lake, "special_education", "special_education2022-23.csv")
+    Files.delete(special)
+    val (e, jobs) = JobCounter.jobs(spark.sparkContext)(
+      intercept[FileNotFoundException](new Pipeline(spark, lake, date).runBronzeToSilverAndGold()))
+    assert(e.getMessage == s"File $special does not exist")
+    assert(e.getSuppressed.isEmpty)
+    for (out <- Seq("housing_affordability", "school_performance"))
+      assert(Files.exists(Paths.get(s"$lake/silver/$out/ingest_date=$date/_SUCCESS")), out)
+    assert(!Files.exists(Paths.get(s"$lake/silver/special_education")))
+    assert(jobs.size == 2, "one write job per output written")
+    assert(JobCounter.running(spark.sparkContext, jobs).isEmpty, "EP1 returned with jobs running")
+  }
+
+  test("EP1 with two missing bronze files throws the first in output order") {
+    val lake = stageLake()
+    val school = bronze(lake, "school_performance", "school_performance.xlsx")
+    val special = bronze(lake, "special_education", "special_education2022-23.csv")
+    Files.delete(school)
+    Files.delete(special)
+    val e = intercept[FileNotFoundException](new Pipeline(spark, lake, date).runBronzeToSilver())
+    assert(e.getMessage.contains(school.toString), e.getMessage)
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq(s"File $special does not exist"))
   }
 
   test("EP1 re-reads bronze on every call and leaves nothing persisted") {
@@ -164,6 +220,10 @@ class PipelineSpec extends SparkSpec with Checkpoints {
 
 object PipelineSpec {
   val date = "2024-01-15"
+
+  /** The bronze file `name` of `dataset` in the lake at `base`. */
+  def bronze(base: String, dataset: String, name: String): Path =
+    Paths.get(s"$base/bronze/$dataset/ingest_date=$date/$name")
 
   /** A fresh bronze lake in a temp dir: the CSVs come from test resources,
     * the XLSX is generated. */

@@ -95,6 +95,18 @@ class ReadersSpec extends SparkSpec {
     assert(df.count() == 3)
   }
 
+  test("S3: XLSX through a file: URI reads what a plain path reads") {
+    val f = File.createTempFile("graft", ".xlsx")
+    TestXlsx.writeSchoolFixture(f)
+    val plain = Readers.xlsx(spark, f.getPath)
+    for (uri <- Seq(f.toURI.toString, s"file://${f.getPath}")) {
+      val df = Readers.xlsx(spark, uri)
+      assert(df.schema == plain.schema, uri)
+      assert(df.collect().toSeq == plain.collect().toSeq, uri)
+    }
+    assert(plain.count() == 8)
+  }
+
   test("S3: A1 column-reference decoding") {
     assert(Xlsx.colIndex("A1") == 0)
     assert(Xlsx.colIndex("Z3") == 25)

@@ -2,12 +2,11 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-
-import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.Files
 
 /** X2 HTTP surface: health-check semantics and pipeline-trigger status
   * mapping, exercised over real HTTP on an ephemeral port. */
-class ServeSpec extends AnyFunSuite {
+class ServeSpec extends SparkSpec {
 
   private val client = HttpClient.newHttpClient()
 
@@ -59,5 +58,21 @@ class ServeSpec extends AnyFunSuite {
       assert(r.statusCode() == 500)
       assert(r.body() == """{"status": "error", "message": "lake \"unreachable\""}""")
     } finally boom.stop()
+  }
+
+  test("a failing EP1 answers 500 with the message of the first failing output") {
+    import PipelineSpec.{bronze, date, stageLake}
+    val lake = stageLake()
+    val special = bronze(lake, "special_education", "special_education2022-23.csv")
+    Files.delete(special)
+    val pipe = new Pipeline(spark, lake, date)
+    val serve = new Serve(() => pipe.runBronzeToSilverAndGold())
+    val port = serve.start()
+    try {
+      val r = post(port, "/api/process-bronze-to-silver", "")
+      assert(r.statusCode() == 500)
+      assert(r.body() ==
+        s"""{"status": "error", "message": "File $special does not exist"}""")
+    } finally serve.stop()
   }
 }
