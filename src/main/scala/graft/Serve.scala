@@ -21,8 +21,17 @@ class Serve(runPipeline: () => String) {
   private val mapper = new ObjectMapper
   private var server: HttpServer = _
 
-  /** Start on `port` (0 = ephemeral); returns the bound port. */
+  /** Start on `port` (0 = ephemeral); returns the bound port.
+    *
+    * The JDK server writes a response's headers and body as two segments.
+    * With Nagle's algorithm on (its default), the body waits for the
+    * client's delayed ACK of the headers, about 40 ms on Linux, on every
+    * exchange that follows another on the same connection. So this turns
+    * `TCP_NODELAY` on through `sun.net.httpserver.nodelay`. The JDK reads
+    * that property once per JVM, when the first `HttpServer` is created, so
+    * it holds for every server in a JVM whose first server is a `Serve`. */
   def start(port: Int = 0): Int = {
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/api/HttpExample", (ex: HttpExchange) => health(ex))
     server.createContext("/api/process-bronze-to-silver", (ex: HttpExchange) => process(ex))

@@ -38,25 +38,35 @@ object Gold {
       .drop("__rn")
   }
 
-  /** Full gold build. All three inputs are county/LEA-cardinality marts, so
-    * both joins broadcast and neither join shuffles. Built and written, the
-    * plan has three exchanges and runs six jobs (under AQE each shuffle
-    * stage and each broadcast is a job of its own):
-    *  - two shuffle stages of the rollup: `countDistinct(school_id)` groups
-    *    by LEA and `school_id` to drop duplicate schools, then by LEA to
-    *    aggregate; an LEA's rows must meet in one task to be counted once;
-    *  - the shuffle by county of [[housingPerCounty]]'s keep-first window,
-    *    which must see all of a county's rows;
+  /** Full gold build. All three inputs are small marts (a row per county,
+    * school or LEA), written as one file each
+    * ([[graft.io.Lake.writeSingleFile]]), so each is coalesced to one
+    * partition here. `coalesce(1)` adds no shuffle, and
+    * a one-partition child meets every distribution the plan asks for: the
+    * two aggregation stages of the rollup (`countDistinct(school_id)` groups
+    * by LEA and `school_id`, then by LEA) and [[housingPerCounty]]'s window
+    * by county run in the same task as the scan, with no exchange. The plan
+    * runs three jobs (under AQE each broadcast is a job of its own):
     *  - two broadcast builds, the special-ed side of J1 and the housing side
-    *    of J3; a shuffle join instead would add a stage per side;
-    *  - the write. */
+    *    of J3. They stay: a shuffle join would add a stage per side;
+    *  - the write.
+    *
+    * There are no join hints. A merge or shuffle-hash hint does not keep the
+    * joins in the one partition: the second join's size estimate (a product
+    * of its inputs) exceeds `spark.sql.maxSinglePartitionBytes`, so
+    * `EnsureRequirements` shuffles both sides to `spark.sql.shuffle.partitions`.
+    *
+    * One partition also makes the `avg`'s summation order depend on the
+    * input alone, not on a shuffle's hash partitioning, so
+    * `ccrpi_score_2023_mean` is the same at any shuffle partition count. */
   def buildLeaJoinedGold(housing: DataFrame, school: DataFrame, special: DataFrame): DataFrame = {
     // normalize join keys — silver_to_gold.py:52-60
-    val housingKeyed = housing.withColumn("county", Normalize.normalizeCounty(col("county_name")))
-    val schoolKeyed = school
+    val housingKeyed = housing.coalesce(1)
+      .withColumn("county", Normalize.normalizeCounty(col("county_name")))
+    val schoolKeyed = school.coalesce(1)
       .withColumn("lea_id", trim(col("lea_id").cast("string")))
       .withColumn("county", Normalize.normalizeCounty(col("district_name")))
-    val specialKeyed = special.withColumn("lea_id", trim(col("lea_id").cast("string")))
+    val specialKeyed = special.coalesce(1).withColumn("lea_id", trim(col("lea_id").cast("string")))
 
     val schoolLea = schoolLeaRollup(schoolKeyed)
 

@@ -90,6 +90,37 @@ class PipelineSpec extends SparkSpec with Checkpoints {
       "total_cost_burden_30_plus_pct"))
   }
 
+  test("gold is the same at any shuffle partition count") {
+    // many schools per LEA, scores that are not binary fractions: a sum
+    // whose order followed a shuffle's hash partitioning would differ
+    val rnd = new scala.util.Random(8)
+    val districts = Seq("Fulton County", "DeKalb County", "Cobb County", "Gwinnett County")
+    val schools = for {
+      lea <- 1 to 12
+      school <- 1 to 150
+    } yield (s"$lea-$school", s"School $school", s"7$lea", districts(lea % districts.size),
+      BigDecimal(40 + 60 * rnd.nextDouble()).setScale(1, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    val dir = Files.createTempDirectory("graft-gold-det").toString
+    graft.io.Lake.writeSingleFile(spark.createDataFrame(schools).toDF(
+      "school_id", "school_name", "lea_id", "district_name", "ccrpi_score_2023"), dir)
+    val (housing, _, special) = pipe.buildSilverFrames()
+    val school = Readers.parquet(spark, dir)
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    val golds =
+      try Seq(1, 2, 4, 8).map { n =>
+        spark.conf.set(key, n.toLong)
+        val gold = graft.gold.Gold.buildLeaJoinedGold(housing, school, special)
+        n -> spark.createDataFrame(gold.collectAsList(), gold.schema)
+      }
+      finally spark.conf.set(key, before)
+    val (_, first) = golds.head
+    assert(first.count() == 12)
+    for ((n, gold) <- golds.tail)
+      assert(first.exceptAll(gold).isEmpty && gold.exceptAll(first).isEmpty,
+        s"gold at $n shuffle partitions differs from gold at 1")
+  }
+
   /** Assert that a `{"rows", "columns", "output_path"}` summary describes
     * the parquet it names. */
   private def assertSummary(summary: JsonNode): Unit = {
@@ -121,7 +152,7 @@ class PipelineSpec extends SparkSpec with Checkpoints {
     assert(ep1Gold.exceptAll(ep2Gold).isEmpty && ep2Gold.exceptAll(ep1Gold).isEmpty)
   }
 
-  test("EP1 runs exactly 9 jobs, EP2 exactly 6, and the readers launch none") {
+  test("EP1 runs exactly 6 jobs, EP2 exactly 3, and the readers launch none") {
     val fresh = new Pipeline(spark, stageLake(), date)
     def jobs[T](body: => T): (T, Int) = JobCounter.count(spark.sparkContext)(body)
     val pins = new Checkpoint // every pin is reported, not just the first to fail
@@ -129,10 +160,10 @@ class PipelineSpec extends SparkSpec with Checkpoints {
     // The silver writes run on worker threads: a thread that dropped the
     // caller's job group would leave them out of this count
     val (summary, ep1) = jobs(fresh.runBronzeToSilverAndGold())
-    pins { assert(ep1 == 9, s"EP1 ran $ep1 jobs") }
-    // EP2: the gold build and its write (see Gold.buildLeaJoinedGold)
+    pins { assert(ep1 == 6, s"EP1 ran $ep1 jobs") }
+    // EP2: two broadcasts and the write (see Gold.buildLeaJoinedGold)
     val (_, ep2) = jobs(fresh.runSilverToGold())
-    pins { assert(ep2 == 6, s"EP2 ran $ep2 jobs") }
+    pins { assert(ep2 == 3, s"EP2 ran $ep2 jobs") }
     // Readers.csv and Readers.csvWithHeaderOffset (bronze), Readers.parquet
     // (each silver output and gold)
     pins { assert(jobs(fresh.readBronzeHousing())._2 == 0, "Readers.csv") }
@@ -150,7 +181,7 @@ class PipelineSpec extends SparkSpec with Checkpoints {
     val (_, jobs) =
       try JobCounter.jobs(sc)(fresh.runBronzeToSilverAndGold())
       finally sc.setLocalProperty(key, null)
-    assert(jobs.size == 9)
+    assert(jobs.size == 6)
     val lost = jobs.filter(_.properties.getProperty(key) != "ep1").map(_.id)
     assert(lost.isEmpty, s"jobs $lost ran without the caller's '$key'")
   }

@@ -41,6 +41,25 @@ class ServeSpec extends SparkSpec {
     } finally serve.stop()
   }
 
+  test("back-to-back exchanges on one connection do not wait for a delayed ACK") {
+    val serve = new Serve(() => """{"unused": true}""")
+    val port = serve.start()
+    val http = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    val req = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/api/HttpExample")).GET.build()
+    def ms(): Double = {
+      val t0 = System.nanoTime()
+      assert(http.send(req, HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
+      (System.nanoTime() - t0) / 1e6
+    }
+    try {
+      (1 to 5).foreach(_ => ms()) // connection and class loading
+      val times = (1 to 20).map(_ => ms()).sorted
+      val median = (times(9) + times(10)) / 2
+      // with Nagle's algorithm on, each exchange waits ~40 ms for the ACK
+      assert(median < 15, s"median $median ms of ${times.mkString(", ")}")
+    } finally serve.stop()
+  }
+
   test("pipeline trigger maps success to 200 ok-JSON and failure to 500 error-JSON") {
     val ok = new Serve(() => """{"silver": {"rows": 3}}""")
     val okPort = ok.start()

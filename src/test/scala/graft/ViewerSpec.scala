@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import org.apache.spark.JobCounter
+
+import graft.io.{Lake, Readers}
 import graft.queries.Viewer
 
 /** EP3 viewer surface over the fixture-built gold table. */
@@ -38,5 +41,29 @@ class ViewerSpec extends SparkSpec {
     assert(best.getString(0) == "dekalb" && best.getDouble(2) == 90.25)
     val overall = qs("overall_best").collect().head
     assert(overall.getInt(2) >= 3) // sum of three ranks, each ≥ 1
+  }
+
+  test("each timed viewer query over a written one-file gold runs one job") {
+    val dir = Files.createTempDirectory("graft-viewer-gold").toString
+    Lake.writeSingleFile(gold, dir)
+    val written = Readers.parquet(spark, dir)
+    val counts = Seq("sample", "most_affordable", "best_ccrpi", "most_inclusive", "overall_best")
+      .map { q =>
+        val df = Viewer.queries(spark, written)(q)
+        q -> JobCounter.count(spark.sparkContext)(
+          df.write.format("noop").mode("overwrite").save())._2
+      }
+    assert(counts.forall(_._2 == 1), counts)
+  }
+
+  test("a lookup analyses only its own query, over its own gold") {
+    val noInclusive = gold.drop("pct_inclusive_80_plus")
+    val qs = Viewer.queries(spark, noInclusive)
+    assert(!qs("sample").columns.contains("pct_inclusive_80_plus"))
+    assert(qs("best_ccrpi").count() == 1)
+    intercept[org.apache.spark.sql.AnalysisException](qs("most_inclusive"))
+    // a later call replaces the view; the first map still answers over its gold
+    Viewer.queries(spark, gold.limit(1))("sample").count()
+    assert(qs("sample").count() == 5)
   }
 }
