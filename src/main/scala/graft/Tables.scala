@@ -13,26 +13,11 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Per-(session, path) memo of the ANALYZED DataFrame. `spark.read.parquet`
-  // lists the path and reads footers for schema inference on every call;
-  // 200+ registered queries × 1-4 table loads each re-paid that for the
-  // same ten immutable files. Reusing the analyzed relation is plan-neutral
-  // — the logical plan is still the parquet scan, so pushdown/pruning and
-  // every PlanSpec guard are unaffected. Keyed on the SESSION REFERENCE
-  // itself (SparkSession uses identity equality), never a hash that a
-  // GC'd-then-reallocated session object could collide with; entries whose
-  // session has stopped are evicted on the next load so plans bound to dead
-  // sessions are neither returned nor retained for the JVM lifetime. The
-  // star-schema inputs are read-only by contract (TESTDATA.md), so
-  // staleness cannot arise.
-  private val loaded =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    loaded.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    loaded.computeIfAbsent((spark, s"$sfDir/$name.parquet"),
-      key => key._1.read.parquet(key._2))
-  }
+  /** One table's parquet scan. Its schema comes from the file footer
+    * ([[graft.io.Readers.parquet]]), so the call launches no job and holds
+    * nothing between calls: a rewritten file is read as it is now. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    graft.io.Readers.parquet(spark, s"$sfDir/$name.parquet")
 
   /** `events.ts` has shipped as parquet TIMESTAMP(NANOS) (which Spark's
     * vectorized reader rejects outright — read as raw long nanos via the

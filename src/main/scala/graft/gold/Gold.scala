@@ -16,13 +16,21 @@ object Gold {
     * pandas `groupby` silently drops rows whose group key is NaN; Spark
     * keeps NULL keys, so every group column is pre-filtered non-null (the
     * reference's `dropna(subset=["lea_id"])` only covers lea_id — county
-    * from the normalizer is the silent one). */
+    * from the normalizer is the silent one).
+    *
+    * The mean sums exactly, as `DECIMAL(38,18)`, and casts back to DOUBLE, so
+    * it does not depend on the order rows reach the aggregate (a double sum
+    * rounds at every step: the same rows in another order, a shuffle or a
+    * smaller Tungsten page, changed its last bit). The mean skips nulls, as
+    * pandas does, and `try_cast` makes a NaN or infinite score null too,
+    * as pandas skips NaN, so ANSI mode has no cast to fail. */
   def schoolLeaRollup(school: DataFrame): DataFrame =
     school
       .filter(col("lea_id").isNotNull && col("district_name").isNotNull && col("county").isNotNull)
       .groupBy(col("lea_id"), col("district_name"), col("county"))
       .agg(
-        avg(col("ccrpi_score_2023")).as("ccrpi_score_2023_mean"), // mean skips nulls, as pandas
+        avg(col("ccrpi_score_2023").try_cast("decimal(38,18)")).cast("double")
+          .as("ccrpi_score_2023_mean"),
         countDistinct(col("school_id")).as("school_count"))       // nunique skips nulls, as pandas
 
   /** One housing row per county, keep-FIRST in stable file order —
@@ -55,10 +63,7 @@ object Gold {
     * joins in the one partition: the second join's size estimate (a product
     * of its inputs) exceeds `spark.sql.maxSinglePartitionBytes`, so
     * `EnsureRequirements` shuffles both sides to `spark.sql.shuffle.partitions`.
-    *
-    * One partition also makes the `avg`'s summation order depend on the
-    * input alone, not on a shuffle's hash partitioning, so
-    * `ccrpi_score_2023_mean` is the same at any shuffle partition count. */
+ */
   def buildLeaJoinedGold(housing: DataFrame, school: DataFrame, special: DataFrame): DataFrame = {
     // normalize join keys — silver_to_gold.py:52-60
     val housingKeyed = housing.coalesce(1)

@@ -44,21 +44,26 @@ object Readers {
 
   /** The all-string schema Spark's header inference gives `path` when it is
     * one visible file: its first line holding a character other than a
-    * space, split by Spark's own tokenizer and named by Spark's
-    * `makeSafeHeader` (`_c<i>` for an empty cell, the index appended to a
-    * duplicate name). `None` where that could differ from Spark's result. */
+    * space, named by [[headerSchema]]. `None` where that could differ from
+    * Spark's result. */
   private def csvHeaderSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val name = new Path(path).getName
+    if (name.startsWith("_") || name.startsWith(".")) None
+    else try readLines(spark, path)(_.find(_.exists(_ != ' '))).flatMap(headerSchema(spark, _))
+    catch { case NonFatal(_) => None }
+  }
+
+  /** The all-string schema Spark names the CSV header `line` with: split
+    * by Spark's own tokenizer and named by Spark's `makeSafeHeader`
+    * (`_c<i>` for an empty cell, the index appended to a duplicate name).
+    * `None` for a line the tokenizer reads as no record. */
+  private def headerSchema(spark: SparkSession, line: String): Option[StructType] = {
     val conf = GraftBridge.sqlConf(spark)
     val opts = new CSVOptions(Map("header" -> "true"), conf.csvColumnPruning,
       conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
-    val name = new Path(path).getName
-    if (name.startsWith("_") || name.startsWith(".")) None
-    else try {
-      readLines(spark, path)(_.find(_.exists(_ != ' ')))
-        .flatMap(line => Option(new CsvParser(opts.asParserSettings).parseLine(line)))
-        .map(cells => StructType(CSVUtils.makeSafeHeader(cells, conf.caseSensitiveAnalysis, opts)
-          .map(StructField(_, StringType, nullable = true))))
-    } catch { case NonFatal(_) => None }
+    Option(new CsvParser(opts.asParserSettings).parseLine(line))
+      .map(cells => StructType(CSVUtils.makeSafeHeader(cells, conf.caseSensitiveAnalysis, opts)
+        .map(StructField(_, StringType, nullable = true))))
   }
 
   /** Apply `f` to the lines of the one file at `path`, read on the driver
@@ -86,50 +91,23 @@ object Readers {
     * header=4).
     *
     * Implementation: the header is line `headerRow` of the file, read on the
-    * driver ([[readLines]]). The data is read as text and numbered with
+    * driver ([[readLines]]) and named as [[csv]] names a header
+    * ([[headerSchema]]). The data is read as text and numbered with
     * `zipWithIndex` — for a single input file the partitions are ordered by
     * byte offset, so the index is the file line number and this stays
     * correct and parallel for arbitrarily large files (no single-partition
     * coalesce); `zipWithIndex` sizes the partitions with a job of its own
     * only when the file spans more than one. Data lines parse via
-    * `from_csv` with an all-string schema named after the header. */
+    * `from_csv` with that all-string schema. */
   def csvWithHeaderOffset(spark: SparkSession, path: String, headerRow: Int = 4): DataFrame = {
     import spark.implicits._
-    val headerLine = readLines(spark, path)(_.drop(headerRow).nextOption())
+    val schema = readLines(spark, path)(_.drop(headerRow).nextOption())
+      .flatMap(headerSchema(spark, _))
       .getOrElse(throw new IllegalArgumentException(
-        s"$path has fewer than ${headerRow + 1} lines — no header to read"))
-    val names = parseCsvLine(headerLine)
+        s"$path has fewer than ${headerRow + 1} lines, or a blank one at $headerRow — no header to read"))
     val lines = spark.read.textFile(path).rdd.zipWithIndex()
     val data = lines.filter(_._2 > headerRow).map(_._1).toDF("line")
-    val schema = StructType(names.map(n => StructField(n, StringType, nullable = true)))
-    data
-      .select(from_csv($"line", schema, Map.empty[String, String]).as("r"))
-      .select(names.map(n => col(s"r.`$n`")): _*)
-  }
-
-  /** Minimal RFC-4180-ish single-line CSV split (quotes + escaped quotes) —
-    * only used for the one header line, data lines go through from_csv. */
-  private[io] def parseCsvLine(line: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var inQ = false
-    var i = 0
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (inQ) {
-        if (c == '"') {
-          if (i + 1 < line.length && line.charAt(i + 1) == '"') { sb.append('"'); i += 1 }
-          else inQ = false
-        } else sb.append(c)
-      } else c match {
-        case '"' => inQ = true
-        case ',' => out += sb.result(); sb.clear()
-        case _   => sb.append(c)
-      }
-      i += 1
-    }
-    out += sb.result()
-    out.toSeq
+    data.select(from_csv($"line", schema, Map.empty[String, String]).as("r")).select("r.*")
   }
 
   /** S3 — XLSX scan (first sheet, row 0 = header), all-string columns. The

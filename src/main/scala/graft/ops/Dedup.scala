@@ -239,7 +239,7 @@ object Dedup {
     // explode and both verify joins all start serial. Par.widen repairs only
     // under-partitioned inputs — a no-op on a well-partitioned corpus; it
     // sits BELOW the tokenize/sig projections so they run post-exchange.
-    val base = Par.widenBySize(docs.select(col(idCol).as("doc_id"), col(textCol).as("__t")))
+    val base = Par.widen(docs.select(col(idCol).as("doc_id"), col(textCol).as("__t")))
       .select(col("doc_id"), tokens(col("__t")).as("toks"))
       .select(col("doc_id"),
         sigOf(col("toks")).as("sig"),
@@ -661,12 +661,13 @@ object Dedup {
       shingleK: Int = 3, numHashes: Int = 128, bands: Int = 16,
       threshold: Double = 0.7, maxBucketSize: Int = 1000): DataFrame = {
     // TWO consumers (the pair kernel's signature base and the anti-join
-    // left side) — when the input carries its own exchanges (x18's
-    // gates → exact-dedup chain), materialize it once instead of running
-    // that whole lineage twice (the multi-consumer checkpoint rule every
-    // kernel here follows). A plain scan stays un-checkpointed: both
-    // consumers then just re-read the file, which is cheaper than holding
-    // a second copy of the corpus in block storage.
+    // left side) — when the input may carry its own exchanges (x18's
+    // gates → exact-dedup chain, or any plan that is not scan-shaped),
+    // materialize it once instead of running that whole lineage twice
+    // (the multi-consumer checkpoint rule every kernel here follows). A
+    // plain scan stays un-checkpointed: both consumers then just re-read
+    // the file, which is cheaper than holding a second copy of the corpus
+    // in block storage.
     val d = if (Par.hasExchange(docs)) docs.localCheckpoint() else docs
     val losers = minhashNearDupPairs(d, idCol, textCol,
       shingleK, numHashes, bands, threshold, maxBucketSize)

@@ -29,27 +29,6 @@ object Multimodal {
   // small belong in memory; flip it once per JVM before any codec call.
   private lazy val imageIoInit: Unit = javax.imageio.ImageIO.setUseCache(false)
 
-  /** Fan a narrow id relation out to the session's full parallelism before
-    * a codec-heavy map stage.
-    *
-    * A synthesis/encode pass costs CPU per ROW (pixels × frames), not per
-    * input BYTE — but a plain `mapPartitions` over a scan inherits the
-    * scan's split count, which parquet sizes by BYTES (1 split per 128 MB).
-    * A few thousand ids occupy one split, so the whole codec pass — GIF
-    * palette quantization, PNG filtering, WAV framing — serializes on ONE
-    * core while the rest of the machine idles (measured: x204's 24k frame
-    * encodes ran single-task; the fan-out cut the query ~3×). The exchange
-    * this inserts moves only the id longs — the payloads do not exist yet —
-    * so it is the "shuffle keys, not payloads" shape: bytes shuffled scale
-    * with row COUNT, never with media size, at any corpus scale. Sized by
-    * `defaultParallelism` (= cluster cores), not a constant, so the same
-    * code saturates local[4] and a thousand-executor deployment. Only ever
-    * WIDENS (r18 ADVICE): an id relation already wider than the core count
-    * passes through untouched — an unconditional repartition would NARROW
-    * it, the exact regression [[Par.widen]] guards against. */
-  def fanOutIds(ids: DataFrame): DataFrame =
-    Par.widen(ids)
-
   /** Typed metadata carried beside every binary payload. */
   val mediaMetaType: StructType = StructType(Seq(
     StructField("mime", StringType),
@@ -315,7 +294,7 @@ object Multimodal {
   def plantSyntheticPngs(ids: DataFrame, idCol: String): DataFrame = {
     val spark = ids.sparkSession
     import spark.implicits._
-    fanOutIds(ids.select(col(idCol).cast("long"))).as[Long]
+    Par.widen(ids.select(col(idCol).cast("long")), bytesPerTask = 1).as[Long]
       .mapPartitions(_.map { id =>
         val w = (8 + id % 9).toInt
         val h = (8 + (id * 7) % 9).toInt
@@ -446,7 +425,7 @@ object Multimodal {
       variantOffset: Long = 1000000L): DataFrame = {
     val spark = ids.sparkSession
     import spark.implicits._
-    fanOutIds(ids.select(col(idCol).cast("long"))).as[Long]
+    Par.widen(ids.select(col(idCol).cast("long")), bytesPerTask = 1).as[Long]
       .mapPartitions(_.flatMap { id =>
         val w = (8 + id % 9).toInt
         val h = (8 + (id * 7) % 9).toInt
@@ -772,7 +751,7 @@ object Multimodal {
       variantFrame: Int = 2, variantOffset: Long = 1000000L): DataFrame = {
     val spark = ids.sparkSession
     import spark.implicits._
-    fanOutIds(ids.select(col(idCol).cast("long"))).as[Long]
+    Par.widen(ids.select(col(idCol).cast("long")), bytesPerTask = 1).as[Long]
       .mapPartitions(_.flatMap { id =>
         Iterator(
           (id, syntheticGifClipPair(id, frames, variant = false, variantFrame)),

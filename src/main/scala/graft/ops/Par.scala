@@ -3,89 +3,76 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Parallelism repair for CPU-heavy map stages.
+/** Parallelism repair for CPU-heavy map stages ([[widen]]), and the
+  * distributed prefix scans and global row numbers that replace
+  * single-partition windows.
   *
   * A single-file (or single-row-group) parquet table scans as ONE input
   * partition, so everything up to the first exchange — tokenizing,
-  * shingling, signature hashing, bigram construction — runs on one core
-  * no matter how many the cluster has. That layout is common at the edges
-  * (small dimension dumps, fresh ingests, test fixtures); operators whose
-  * pre-exchange stage is genuinely CPU-bound repair it themselves rather
-  * than trusting the upstream layout.
-  *
-  * Applied SELECTIVELY, by measurement: the interpreted higher-order-
-  * function pipeline in topNgrams gains 4.6× (8.1 s → 1.8 s warm at
-  * sf0.1); the codegen'd minhash/shingle kernels measured NEUTRAL to
-  * slightly negative (their single-core map cost is already small next to
-  * their shuffles), so they do not widen.
+  * shingling, signature hashing, bigram construction, media codecs — runs
+  * on one core no matter how many the cluster has. That layout is common
+  * at the edges (small dimension dumps, fresh ingests, test fixtures);
+  * operators whose pre-exchange stage is genuinely CPU-bound repair it
+  * themselves rather than trusting the upstream layout.
   */
 private[graft] object Par {
 
-  /** Repartition up to the cluster's default parallelism — only when the
-    * input arrives with FEWER partitions (never narrows a well-partitioned
-    * 100 TB table, where the exchange would be catastrophic; the widening
-    * shuffle on an under-partitioned input is by definition small). The
-    * explicit partition count matters: AQE would coalesce an un-numbered
-    * exchange of a few small MB right back to one partition. */
-  def widen(df: DataFrame): DataFrame = widenTo(df,
-    df.sparkSession.sparkContext.defaultParallelism)
-
-  /** Does this frame's plan carry an exchange? Decided on the OPTIMIZED
-    * LOGICAL plan, because the physical probes all lie here: `sparkPlan` is
-    * pre-EnsureRequirements (no Exchange nodes yet) and
-    * AdaptiveSparkPlanExec hides its prepared plan from TreeNode traversal,
-    * so both answered "no" for every plan (r19 bug). Any operator below
-    * that requires a distribution plans an exchange (broadcast or shuffle);
-    * `false` is reserved for the scan-shaped plans
-    * (scan/filter/project/union/generate) the widen sites actually feed.
-    * No job runs. */
-  private[graft] def hasExchange(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    df.queryExecution.optimizedPlan.exists {
-      case s: Sort => s.global
-      case _: Aggregate | _: Join | _: Window | _: Distinct |
-           _: Deduplicate | _: RepartitionOperation | _: GlobalLimit => true
-      case _ => false
-    }
-  }
-
-  /** [[widen]] with an explicit target — for map stages whose serial cost
-    * is real but modest, where full defaultParallelism fan-out costs more
-    * in per-task/per-shuffle-block constants across every downstream stage
-    * than it recovers (measured r19: 32-way widening of a ~2000-row
-    * relation added ~10 ms × tasks × stages). Still only ever widens. */
-  def widenTo(df: DataFrame, target: Int): DataFrame = {
-    // Exchange-bearing plans are excluded for TWO reasons: (1) their
-    // downstream partitioning is already shuffle.partitions-wide, so widen
-    // would be a no-op; (2) probing `.rdd.getNumPartitions` on an adaptive
-    // plan MATERIALIZES its query stages eagerly (AQE must run every
-    // exchange to produce the final RDD), and the repartitioned copy would
-    // then re-run them — a hidden double execution of the whole upstream
-    // lineage. Only scan-shaped (exchange-free) inputs are probed; for
-    // those, .rdd compiles the plan without running any job.
+  /** Repartition a scan-shaped input that arrives with fewer partitions
+    * than its size asks for; return anything else unchanged.
+    *
+    * The target is the optimized plan's `sizeInBytes` ÷ `bytesPerTask` + 1,
+    * clamped to [1, defaultParallelism]; for a scan the estimate is the file
+    * size, so no job runs. The default grain, 64 KiB of compressed input,
+    * is small because the stages this guards amplify per byte (tokenize →
+    * shingle → multi-hash is 10–100× the scan cost): a 0.6 MB corpus wants
+    * ~10-way, where 32-way pays more in per-task constants than it buys.
+    * A stage whose cost is per ROW passes `bytesPerTask = 1`, so any input
+    * of at least defaultParallelism bytes goes to full parallelism. Media
+    * codecs are that case: an encode costs CPU per row (pixels × frames),
+    * a scan splits by bytes, so a few thousand ids sit in one split and the
+    * codec pass runs on one core (x204 ran single-task; the fan-out cut it
+    * ~3×). That shuffle moves only the id longs, never the payloads.
+    *
+    * Only ever widens, so a well-partitioned table is never narrowed. The
+    * explicit count matters: AQE would coalesce an un-numbered exchange of
+    * a few MB back to one partition. A plan that may hold an exchange
+    * ([[hasExchange]]) passes through as planned: probing its partition
+    * count would run every upstream stage under AQE, and the repartitioned
+    * copy would run them again. Every caller feeds a scan, so AQE
+    * coalescing such an input to one partition does not arise today. */
+  def widen(df: DataFrame, bytesPerTask: Long = 64L << 10): DataFrame =
     if (hasExchange(df)) df
     else {
-      val t = math.min(target, df.sparkSession.sparkContext.defaultParallelism)
-      if (df.rdd.getNumPartitions < t) df.repartition(t) else df
+      val cap = BigInt(df.sparkSession.sparkContext.defaultParallelism)
+      val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      val target = ((est / bytesPerTask + 1) min cap max BigInt(1)).toInt
+      if (df.rdd.getNumPartitions < target) df.repartition(target) else df
     }
-  }
 
-  /** Scale-adaptive widen (guide §2: derive partitioning from input size,
-    * never a constant tuned for one box): target ≈ estimated input bytes /
-    * `bytesPerTask`, clamped to defaultParallelism. The estimate comes from
-    * the optimized logical plan (for the scan-shaped inputs this guards,
-    * that is the parquet file size, cheap and accurate; no job runs). The
-    * default task grain is 64 KiB of compressed input — small because the
-    * guarded stages AMPLIFY per byte (tokenize → shingle → multi-hash is
-    * 10–100× the scan cost; measured r19: a 0.6 MB corpus wants ~10-way,
-    * where 32-way pays more in per-task constants than it buys and 1-way
-    * serializes ~2 s of signature work). At 100 TB the input arrives in
-    * thousands of splits and this is a structural no-op. */
-  def widenBySize(df: DataFrame, bytesPerTask: Long = 64L << 10): DataFrame = {
-    val cap = BigInt(df.sparkSession.sparkContext.defaultParallelism)
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val target = ((est / bytesPerTask + 1) min cap max BigInt(1)).toInt
-    widenTo(df, target)
+  /** Might this frame's plan carry an exchange? `false` only when every
+    * node of the OPTIMIZED LOGICAL plan is scan-shaped — a file, local,
+    * range or RDD relation under projections, filters, generators, unions,
+    * aliases and typed per-row object ops — and no expression holds a
+    * subquery. Any other operator may require a distribution, so it
+    * counts as an exchange. Decided on the logical plan because the
+    * physical probes all lie: `sparkPlan` is pre-EnsureRequirements (no
+    * Exchange nodes yet) and AdaptiveSparkPlanExec hides its prepared plan
+    * from TreeNode traversal. No job runs. */
+  private[graft] def hasExchange(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    df.queryExecution.optimizedPlan.exists { node =>
+      val scanShaped = node match {
+        case _: LogicalRelation | _: LocalRelation | _: Range | _: LogicalRDD |
+             _: Project | _: Filter | _: Generate | _: Union | _: SubqueryAlias |
+             _: DeserializeToObject | _: SerializeFromObject | _: MapElements |
+             _: MapPartitions | _: TypedFilter | _: AppendColumns => true
+        case _ => false
+      }
+      !scanShaped || node.expressions.exists(_.exists(_.isInstanceOf[SubqueryExpression]))
+    }
   }
 
   /** Distributed EXCLUSIVE prefix sum — the textbook two-pass scan that

@@ -570,7 +570,7 @@ object Similarity {
     // query-matched tokens, never the full token array
     // widen a single-split input before the tokenize projection (guide
     // §2.5) — no-op on well-partitioned or exchange-bearing inputs
-    val base = graft.ops.Par.widenBySize(
+    val base = graft.ops.Par.widen(
         docs.select(col(idCol).as("doc_id"), col(textCol)))
       .select(col("doc_id"), size(toks).cast("long").as("len"),
         filter(toks, t => array_contains(q, t)).as("__m"))

@@ -74,7 +74,7 @@ object TextAnalysis {
     val meanWordLen = (nChars - (nWords - lit(1.0))) / nullif(nWords, lit(0.0))
     // widen a single-split input before the regex-heavy feature projection
     // (guide §2.5) — no-op on well-partitioned or exchange-bearing inputs
-    Par.widenBySize(docs.select(col(idCol), col(textCol))).select(
+    Par.widen(docs.select(col(idCol), col(textCol))).select(
       col(idCol),
       nChars.as("n_chars"),
       punctRatio.as("punct_ratio"),
@@ -173,7 +173,7 @@ object TextAnalysis {
       k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = toksOf(docs, textCol)
-    val wide = Par.widen(docs)
+    val wide = Par.widen(docs, bytesPerTask = 1)
     val counts = wide
       .select(col(groupCol), explode(ngram_hashes(toks, 2)).as("__h"))
       .groupBy(col(groupCol), col("__h"))
@@ -364,7 +364,7 @@ object TextAnalysis {
       shingleK: Int = 3): DataFrame = {
     // widen a single-split input before the shingle projection (guide §2.5)
     val exploded = Dedup.shingleSets(
-      Par.widenBySize(docs.select(col(idCol), col(textCol))), idCol, textCol, shingleK)
+      Par.widen(docs.select(col(idCol), col(textCol))), idCol, textCol, shingleK)
       .select(col("doc_id"), explode(col("shingles")).as("h"))
     val firstOcc = exploded.groupBy(col("h")).agg(min(col("doc_id")).as("first_doc"))
     exploded.join(firstOcc, Seq("h"))

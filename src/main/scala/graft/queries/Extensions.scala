@@ -33,7 +33,7 @@ object Extensions {
       // widen the corpus before the one-time pair mine (guide §2.5): the
       // single-split local scan would otherwise shingle-hash the whole
       // corpus serially; no-op on a well-partitioned input
-      Dedup.ngramJaccardPairs(graft.ops.Par.widenBySize(docs(s, dir)),
+      Dedup.ngramJaccardPairs(graft.ops.Par.widen(docs(s, dir)),
         "doc_id", "text", shingleK = 3, threshold = 0.5)
     }
 
@@ -53,7 +53,7 @@ object Extensions {
       // widen BEFORE tokenizing (guide §2.5): a single-split corpus would
       // otherwise checkpoint ONE partition, serializing the first map stage
       // of every downstream token consumer for the whole session
-      graft.ops.Par.widenBySize(docs(s, dir).select(col("doc_id"), col("lang"),
+      graft.ops.Par.widen(docs(s, dir).select(col("doc_id"), col("lang"),
           col("source"), col("text")))
         .select(col("doc_id"), col("lang"), col("source"),
           graft.ops.Dedup.tokens(col("text")).as("tokens"))
@@ -554,9 +554,9 @@ object Extensions {
   def x194GifFrames(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // codec fan-out: GIF sequence encode is CPU-per-row, not per-byte —
-    // spread the id rows before the heavy map (Multimodal.fanOutIds doc)
-    val media = Multimodal.fanOutIds(
-      docs(s, dir).select(col("doc_id").cast("long"))).as[Long]
+    // spread the id rows before the heavy map (Par.widen doc)
+    val media = graft.ops.Par.widen(
+      docs(s, dir).select(col("doc_id").cast("long")), bytesPerTask = 1).as[Long]
       .mapPartitions(_.map { id =>
         (id, Multimodal.syntheticGif(id, (1 + id % 4).toInt))
       })
@@ -587,9 +587,9 @@ object Extensions {
   def x195WavStats(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // codec fan-out: WAV encode+decode is CPU-per-row — spread the id rows
-    // before the heavy map (Multimodal.fanOutIds doc)
-    val media = Multimodal.fanOutIds(
-      docs(s, dir).select(col("doc_id").cast("long"))).as[Long]
+    // before the heavy map (Par.widen doc)
+    val media = graft.ops.Par.widen(
+      docs(s, dir).select(col("doc_id").cast("long")), bytesPerTask = 1).as[Long]
       .mapPartitions(_.map { id =>
         (id, Multimodal.syntheticWav(id, (500 + id % 300).toInt))
       })
@@ -631,9 +631,9 @@ object Extensions {
   def x197CodecContract(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // codec fan-out: the eight-family plant runs four real encoders per
-    // partition — spread the id rows first (Multimodal.fanOutIds doc)
-    val media = Multimodal.fanOutIds(
-      docs(s, dir).select(col("doc_id").cast("long"))).as[Long]
+    // partition — spread the id rows first (Par.widen doc)
+    val media = graft.ops.Par.widen(
+      docs(s, dir).select(col("doc_id").cast("long")), bytesPerTask = 1).as[Long]
       .mapPartitions(_.map { id =>
         val payload: Array[Byte] = (id % 8) match {
           case 0 => Multimodal.syntheticPng(id, 8, 8)
@@ -1586,7 +1586,7 @@ object Extensions {
     import s.implicits._
     // widen the serial shingle projection (guide §2.5); the distinct
     // exchange below is shared by all three consumers via ReusedExchange
-    val sh = graft.ops.Par.widenBySize(docs(s, dir).select($"source", $"text"))
+    val sh = graft.ops.Par.widen(docs(s, dir).select($"source", $"text"))
       .select($"source", explode(
         graft.functions.Exprs.shingle_hashes(Dedup.tokens($"text"), 3)).as("h"))
       .distinct()
@@ -7274,7 +7274,7 @@ object Extensions {
     import s.implicits._
     // widen the serial score projection (guide §2.5) before the lazy
     // checkpoint that feeds the rank kernel's histogram + the value join
-    val scored = graft.ops.Par.widenBySize(docs(s, dir).select($"doc_id",
+    val scored = graft.ops.Par.widen(docs(s, dir).select($"doc_id",
       TextAnalysis.qualityScoreCol("text").as("q")))
       .localCheckpoint(eager = false)
     val paired = ngramPairGraph(s, dir)

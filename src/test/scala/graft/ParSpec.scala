@@ -1,12 +1,16 @@
 package graft
 
-import org.apache.spark.sql.Row
+import java.nio.file.Files
+
+import org.apache.spark.JobCounter
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.ops.Par
 
-/** Direct property oracles for the distributed prefix-scan kernel
+/** The widen contract, and direct property oracles for the distributed
+  * prefix-scan kernel
   * (`ops/Par.scala`) — seeded random sweeps over (values, weights, key
   * groups, input partition counts, shuffle-partition configs), each case
   * checked against a driver-computed sequential scan. Seven queries ride
@@ -214,5 +218,58 @@ class ParSpec extends SparkSpec {
       Seq(Par.RankSpec("g", ascending = true, "rg")))
     assert(out.columns.toSet == Set("id", "g", "payload", "rg"))
     assert(out.count() == 50L)
+  }
+
+  /** A parquet table written as one file, read back as one partition. */
+  private def onePartitionScan(): DataFrame = {
+    val dir = Files.createTempDirectory("graft-widen").resolve("t").toString
+    spark.range(5000).selectExpr("id", "repeat('x', 40) AS s").coalesce(1).write.parquet(dir)
+    graft.io.Readers.parquet(spark, dir)
+  }
+
+  private def cores: Int = spark.sparkContext.defaultParallelism
+
+  test("widen passes a plan that may hold an exchange through and launches no job") {
+    val s = spark
+    import s.implicits._
+    val frames = Seq(
+      "mapGroups" -> spark.range(100).as[Long].groupByKey(_ % 3)
+        .mapGroups((k, it) => (k, it.size)).toDF(),
+      "REBALANCE" -> spark.sql("SELECT /*+ REBALANCE(id) */ * FROM range(100)"),
+      "scalar subquery" -> spark.sql(
+        "SELECT * FROM range(100) WHERE id > (SELECT max(id) FROM range(5))"))
+    val got = frames.map { case (name, df) =>
+      val (out, jobs) = JobCounter.count(spark.sparkContext)(Par.widen(df))
+      (name, jobs, out eq df)
+    }
+    assert(got == frames.map { case (name, _) => (name, 0, true) })
+    assert(frames.forall { case (_, df) => Par.hasExchange(df) })
+  }
+
+  test("widen spreads a one-partition scan to its size over bytesPerTask, capped at the cores") {
+    val scan = onePartitionScan().select(col("id"), length(col("s")).as("n"))
+    assert(scan.rdd.getNumPartitions == 1 && !Par.hasExchange(scan))
+    val size = scan.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
+    for (bytesPerTask <- Seq(size / 2, size, 2 * size, 1L)) { // 1 byte: the cores
+      val (out, jobs) =
+        JobCounter.count(spark.sparkContext)(Par.widen(scan, bytesPerTask = bytesPerTask))
+      assert(jobs == 0, s"bytesPerTask $bytesPerTask")
+      assert(out.rdd.getNumPartitions == math.min(cores.toLong, size / bytesPerTask + 1),
+        s"bytesPerTask $bytesPerTask")
+    }
+  }
+
+  test("widen spreads a localCheckpointed scan") {
+    val pinned = onePartitionScan().localCheckpoint()
+    assert(pinned.rdd.getNumPartitions == 1)
+    assert(Par.widen(pinned, bytesPerTask = 1).rdd.getNumPartitions == cores)
+  }
+
+  test("widen never narrows an input wider than its target") {
+    val wide = spark.range(0, 1000, 1, 2 * cores).toDF()
+    for (bytesPerTask <- Seq(1L, 64L << 10)) {
+      val out = Par.widen(wide, bytesPerTask = bytesPerTask)
+      assert((out eq wide) && out.rdd.getNumPartitions == 2 * cores)
+    }
   }
 }

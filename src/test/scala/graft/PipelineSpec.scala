@@ -121,6 +121,30 @@ class PipelineSpec extends SparkSpec with Checkpoints {
         s"gold at $n shuffle partitions differs from gold at 1")
   }
 
+  test("gold does not depend on the order school rows arrive in") {
+    // the same rows in file order and shuffled: a mean summed as doubles
+    // rounds differently in another order
+    val rnd = new scala.util.Random(9)
+    val districts = Seq("Fulton County", "DeKalb County", "Cobb County", "Gwinnett County")
+    val schools = for {
+      lea <- 1 to 12
+      school <- 1 to 500
+    } yield (s"$lea-$school", s"School $school", s"7$lea", districts(lea % districts.size),
+      100 * rnd.nextDouble())
+    val dir = Files.createTempDirectory("graft-gold-order").toString
+    graft.io.Lake.writeSingleFile(spark.createDataFrame(schools).toDF(
+      "school_id", "school_name", "lea_id", "district_name", "ccrpi_score_2023"), dir)
+    val (housing, _, special) = pipe.buildSilverFrames()
+    val school = Readers.parquet(spark, dir)
+    val golds = Seq(school, school.orderBy(org.apache.spark.sql.functions.rand(3))).map { rows =>
+      val gold = graft.gold.Gold.buildLeaJoinedGold(housing, rows, special)
+      spark.createDataFrame(gold.collectAsList(), gold.schema)
+    }
+    val Seq(inOrder, shuffled) = golds
+    assert(inOrder.count() == 12)
+    assert(inOrder.exceptAll(shuffled).isEmpty && shuffled.exceptAll(inOrder).isEmpty)
+  }
+
   /** Assert that a `{"rows", "columns", "output_path"}` summary describes
     * the parquet it names. */
   private def assertSummary(summary: JsonNode): Unit = {

@@ -76,6 +76,20 @@ class ReadersSpec extends SparkSpec {
     assert(e.getMessage.contains("fewer than 5 lines"))
   }
 
+  test("S2: a header at line 4 gets the names S1 gives it at line 0") {
+    for ((header, names) <- Seq(
+        "A,B,A," -> Seq("A0", "B", "A2", "_c3"),
+        "a,,c,d" -> Seq("a", "_c1", "c", "d"),
+        "\"q,1\",\"\"\"r\"\"\",s,t" -> Seq("q,1", "\"\"\"r\"\"\"", "s", "t"))) { // escape is a backslash
+      val s1 = Readers.csv(spark, tempCsv(s"$header\n1,2,3,4\n"))
+      val s2 = Readers.csvWithHeaderOffset(
+        spark, tempCsv(s"m0\nm1\nm2\nm3\n$header\n1,2,3,4\n"), headerRow = 4)
+      assert(s1.columns.toSeq == names, header)
+      assert(s2.schema == s1.schema, header)
+      assert(s2.collect().toSeq == s1.collect().toSeq, header)
+    }
+  }
+
   test("S3: minimal XLSX reader — shared strings, inline strings, numbers, gaps") {
     val f = File.createTempFile("graft", ".xlsx")
     TestXlsx.write(f, Seq(
