@@ -14,9 +14,13 @@ object Gold {
   /** LEA-level school rollup — silver_to_gold.py:63-70.
     *
     * pandas `groupby` silently drops rows whose group key is NaN; Spark
-    * keeps NULL keys, so every group column is pre-filtered non-null (the
+    * keeps NULL keys, so every group column is filtered non-null (the
     * reference's `dropna(subset=["lea_id"])` only covers lea_id — county
-    * from the normalizer is the silent one).
+    * from the normalizer is the silent one). `county` is a function of
+    * `district_name`, a group key, so it is derived after the aggregate,
+    * once per LEA instead of once per school row, and the groups and their
+    * values are the same. (Catalyst still pushes the not-null filter on it
+    * below the aggregate, as it reads only a group key.)
     *
     * The mean sums exactly, as `DECIMAL(38,18)`, and casts back to DOUBLE, so
     * it does not depend on the order rows reach the aggregate (a double sum
@@ -26,12 +30,14 @@ object Gold {
     * as pandas skips NaN, so ANSI mode has no cast to fail. */
   def schoolLeaRollup(school: DataFrame): DataFrame =
     school
-      .filter(col("lea_id").isNotNull && col("district_name").isNotNull && col("county").isNotNull)
-      .groupBy(col("lea_id"), col("district_name"), col("county"))
+      .filter(col("lea_id").isNotNull && col("district_name").isNotNull)
+      .groupBy(col("lea_id"), col("district_name"))
       .agg(
         avg(col("ccrpi_score_2023").try_cast("decimal(38,18)")).cast("double")
           .as("ccrpi_score_2023_mean"),
         countDistinct(col("school_id")).as("school_count"))       // nunique skips nulls, as pandas
+      .withColumn("county", Normalize.normalizeCounty(col("district_name")))
+      .filter(col("county").isNotNull)
 
   /** One housing row per county, keep-FIRST in stable file order —
     * silver_to_gold.py:81. `dropDuplicates` keeps an arbitrary row, so this
@@ -70,7 +76,6 @@ object Gold {
       .withColumn("county", Normalize.normalizeCounty(col("county_name")))
     val schoolKeyed = school.coalesce(1)
       .withColumn("lea_id", trim(col("lea_id").cast("string")))
-      .withColumn("county", Normalize.normalizeCounty(col("district_name")))
     val specialKeyed = special.coalesce(1).withColumn("lea_id", trim(col("lea_id").cast("string")))
 
     val schoolLea = schoolLeaRollup(schoolKeyed)

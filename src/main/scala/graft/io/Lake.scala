@@ -17,6 +17,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   */
 object Lake {
 
+  /** The parquet codec of every file the lake sinks write. zstd: on the
+    * pipeline's silver and gold marts it writes about a third fewer bytes
+    * than Spark's default snappy (gzip is larger, lz4_raw about as large
+    * as snappy). One constant, not a setting: the format of a lake file
+    * does not depend on the session that wrote it. Spark and DuckDB both
+    * read zstd parquet. */
+  private val Codec = "zstd"
+
   /** `base/layer/dataset/ingest_date=DATE` — the reference's path scheme.
     * Path-traversal hardened: `layer`/`dataset` must be single plain path
     * segments and `ingestDate` a literal `YYYY-MM-DD` — a value like
@@ -39,7 +47,7 @@ object Lake {
     * coalesce matches the reference's one-file-per-dataset layout and is for
     * small silver/gold marts only; large tables use [[writePartitioned]]. */
   def writeSingleFile(df: DataFrame, dir: String): Unit =
-    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir)
+    df.coalesce(1).write.mode(SaveMode.Overwrite).option("compression", Codec).parquet(dir)
 
   /** S6 — Hive-partitioned parquet write; `partitionOverwriteMode=dynamic`
     * so re-running one ingest_date never clobbers sibling partitions. */
@@ -47,6 +55,7 @@ object Lake {
     df.write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
+      .option("compression", Codec)
       .partitionBy(partitionCols: _*)
       .parquet(dir)
 
@@ -60,6 +69,7 @@ object Lake {
       .bucketBy(numBuckets, bucketCol)
       .sortBy(bucketCol)
       .format("parquet")
+      .option("compression", Codec)
       .saveAsTable(table)
 
   /** Schema-evolution read: a directory whose parquet files were written at
@@ -292,7 +302,7 @@ object Lake {
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
       .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(dir)
+      .write.mode(SaveMode.Overwrite).option("compression", Codec).parquet(dir)
   }
 
   /** Small-file compaction: rewrite a directory into ⌈bytes/target⌉ files.
@@ -322,7 +332,7 @@ object Lake {
       if (sortCols.isEmpty) src.repartition(nFiles)
       else src.repartitionByRange(nFiles, sortCols.map(col): _*)
         .sortWithinPartitions(sortCols.map(col): _*)
-    repartitioned.write.mode(SaveMode.Overwrite).parquet(dstDir)
+    repartitioned.write.mode(SaveMode.Overwrite).option("compression", Codec).parquet(dstDir)
   }
 
   /** PLAN compaction over file metadata without touching data: pack

@@ -1,6 +1,6 @@
 package graft.io
 
-import java.io.{BufferedInputStream, File, FileInputStream, InputStream}
+import java.io.{BufferedInputStream, InputStream}
 import java.util.zip.ZipInputStream
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 import scala.collection.mutable.ArrayBuffer
@@ -136,13 +136,6 @@ object Xlsx {
   /** Default cap on an entry's decompressed size: 64 MiB, far above any
     * legitimate single-sheet workbook this reader targets. */
   val MaxEntryBytes: Long = 1L << 26
-
-  /** First worksheet (sheet1) of the workbook in `file`; see the stream
-    * overload. */
-  def readSheet(file: File, maxEntryBytes: Long = MaxEntryBytes): Seq[Array[String]] = {
-    val in = new FileInputStream(file)
-    try readSheet(in, file.toString, maxEntryBytes) finally in.close()
-  }
 
   /** First worksheet (sheet1) of the workbook read from `in` (named `what`
     * in errors) as rows of nullable cell strings. `maxEntryBytes` caps the

@@ -5269,7 +5269,7 @@ object Extensions {
     * to DuckDB's 0.03 s COPY is the two-job launch floor, accepted. */
   def x55OrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_x55_orc"
+    val tmp = roundTripDir(s, "graft_x55_orc")
     graft.io.Lake.writeOrc(
       Tables.load(s, dir, "orders")
         .select($"o_orderkey", $"o_custkey", $"o_totalprice", $"o_orderpriority"),
@@ -5336,7 +5336,7 @@ object Extensions {
     * crossing it. */
   def x57JsonlRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_x57_jsonl"
+    val tmp = roundTripDir(s, "graft_x57_jsonl")
     val src = docs(s, dir)
     src.write.mode("overwrite").json(tmp)
     s.read.schema(src.schema).json(tmp)
@@ -5705,7 +5705,7 @@ object Extensions {
   def x69SchemaEvolution(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ev = Tables.events(s, dir)
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_x69_evo"
+    val tmp = roundTripDir(s, "graft_x69_evo")
     ev.filter($"event_id" % 2 === 0)
       .select($"event_id", $"user_id", $"event_type")
       .write.mode("overwrite").parquet(tmp)
@@ -5884,6 +5884,15 @@ object Extensions {
       |FROM documents d LEFT JOIN m ON d.doc_id = m.new_id
       |WHERE d.doc_id % 10 >= 8
       |ORDER BY d.doc_id""".stripMargin
+
+  /** A fresh directory for one call's format round trip, so concurrent
+    * sessions never share one. The returned frame reads it lazily, so it
+    * is deleted when its FileSystem closes (at JVM exit), not here. */
+  private def roundTripDir(s: SparkSession, prefix: String): String = {
+    val dir = new org.apache.hadoop.fs.Path(java.nio.file.Files.createTempDirectory(prefix).toUri)
+    dir.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(dir)
+    dir.toString
+  }
 
   // ------------------------------------- x201 streaming-ANN-serving batch twin
   /** The on-disk-index ANN SERVE verdict — x199's discipline applied to the

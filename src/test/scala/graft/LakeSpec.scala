@@ -2,6 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.io.Lake
@@ -30,6 +36,16 @@ class LakeSpec extends SparkSpec {
     val after = spark.read.parquet(dir)
     assert(after.count() == 4)
     assert(after.filter($"ingest_date" === "2024-01-02").collect().head.getLong(0) == 9L)
+  }
+
+  test("writePartitioned writes zstd parquet") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-lake").toString + "/by_date"
+    Lake.writePartitioned(
+      Seq((1L, "2024-01-01"), (2L, "2024-01-02")).toDF("id", "ingest_date"), dir, Seq("ingest_date"))
+    val codecs = LakeSpec.columnChunkCodecs(spark, dir)
+    assert(codecs.map(_._1).distinct.length == 2, codecs)
+    assert(codecs.forall(_._2 == "ZSTD"), codecs)
   }
 
   test("bucketed tables: same-bucket join plans with zero shuffle exchanges") {
@@ -278,5 +294,24 @@ class LakeSpec extends SparkSpec {
     // contiguity: date ranges never interleave across bins
     val spans = plan.sortBy(_._1).map(p => (p._4, p._5))
     assert(spans.sliding(2).forall { case Array((_, hi), (lo, _)) => hi < lo; case _ => true })
+  }
+}
+
+object LakeSpec {
+
+  /** (file, codec) for every column chunk of every parquet file under
+    * `dir`, read from the footers. */
+  def columnChunkCodecs(spark: SparkSession, dir: String): Seq[(String, String)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    val it = root.getFileSystem(conf).listFiles(root, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(_.getPath.getName.endsWith(".parquet")).toSeq
+    files.flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try reader.getFooter.getBlocks.asScala.toSeq
+        .flatMap(_.getColumns.asScala.map(f.getPath.getName -> _.getCodec.name))
+      finally reader.close()
+    }
   }
 }

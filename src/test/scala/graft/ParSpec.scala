@@ -149,6 +149,30 @@ class ParSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
   }
 
+  test("exclusivePrefixByWithTotals over a LongType key: each key's totals are its rows' sums") {
+    // the totals map is keyed by the boxed values the offsets collect
+    // returns (java.lang.Long here); Map[Any, …] looks keys up with
+    // cooperative equality, so an Int literal finds a Long key too
+    val rnd = new Random(427)
+    val rows = randomRel(rnd, 200, nKeys = 5)
+    val longKeyed = StructType(schema.fields.updated(0, StructField("k", LongType, nullable = false)))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map(r => Row(r.getInt(0).toLong +: r.toSeq.tail: _*)), 3),
+      longKeyed)
+    val (_, totals) = withShufflePartitions(4) {
+      Par.exclusivePrefixByWithTotals(df, "k", col("ord").asc, Seq("w1" -> "p1", "w2" -> "p2"))
+    }
+    def weight(r: Row, i: Int): Long = Option(r.get(i)).map(_.asInstanceOf[Long]).getOrElse(0L)
+    val want = rows.groupBy(_.getInt(0)).map { case (k, grp) =>
+      k -> Seq(grp.map(weight(_, 2)).sum, grp.map(weight(_, 3)).sum) }
+    assert(totals.keySet.forall(_.isInstanceOf[java.lang.Long]), totals.keySet)
+    assert(totals.size == want.size)
+    for ((k, sums) <- want) {
+      assert(totals.get(k.toLong).contains(sums), s"key $k as Long")
+      assert(totals.getOrElse(k, Nil) == sums, s"key $k as Int")
+    }
+  }
+
   test("globalRowNumber ≡ row_number over (value asc/desc, tie) with duplicate values") {
     val rnd = new Random(424)
     for (iter <- 1 to 10) {

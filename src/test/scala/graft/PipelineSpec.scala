@@ -176,6 +176,18 @@ class PipelineSpec extends SparkSpec with Checkpoints {
     assert(ep1Gold.exceptAll(ep2Gold).isEmpty && ep2Gold.exceptAll(ep1Gold).isEmpty)
   }
 
+  test("EP1 and EP2 write every output as zstd parquet") {
+    val fresh = new Pipeline(spark, stageLake(), date)
+    val ep1 = mapper.readTree(fresh.runBronzeToSilverAndGold()).findValues("output_path").asScala
+    val ep2 = mapper.readTree(fresh.runSilverToGold()).get("output_path")
+    assert(ep1.length == 4)
+    for (out <- (ep1 :+ ep2).map(_.asText)) {
+      val codecs = LakeSpec.columnChunkCodecs(spark, out)
+      assert(codecs.nonEmpty, out)
+      assert(codecs.forall(_._2 == "ZSTD"), s"$out: $codecs")
+    }
+  }
+
   test("EP1 runs exactly 6 jobs, EP2 exactly 3, and the readers launch none") {
     val fresh = new Pipeline(spark, stageLake(), date)
     def jobs[T](body: => T): (T, Int) = JobCounter.count(spark.sparkContext)(body)

@@ -97,7 +97,7 @@ class ReadersSpec extends SparkSpec {
       Seq("shared text", 42, 3.5),
       Seq("#inline text", null, "#  padded  "),
       Seq("shared text", "#", 7)))
-    val rows = Xlsx.readSheet(f)
+    val rows = TestXlsx.read(f)
     assert(rows.length == 4)
     assert(rows.head.toSeq == Seq("colA", "colB", "colC"))
     assert(rows(1).toSeq == Seq("shared text", "42", "3.5"))

@@ -1,6 +1,6 @@
 package graft
 
-import java.io.{File, FileOutputStream}
+import java.io.{File, FileInputStream, FileOutputStream}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
 /** Hand-rolled minimal XLSX writer for test fixtures (independent of the
@@ -91,4 +91,11 @@ object TestXlsx {
     Seq(5001, "School F", 605, "DeKalb County", 80.0, "z"),
     Seq(4001, "School E", 604, "Zero District", 66.0, "z"),
     Seq(6001, "School G", 606, "#, Georgia", 50.0, "z")))
+
+  /** The first worksheet of `file`, read through the production reader's
+    * stream overload. */
+  def read(file: File, maxEntryBytes: Long = graft.io.Xlsx.MaxEntryBytes): Seq[Array[String]] = {
+    val in = new FileInputStream(file)
+    try graft.io.Xlsx.readSheet(in, file.toString, maxEntryBytes) finally in.close()
+  }
 }
