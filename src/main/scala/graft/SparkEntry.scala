@@ -1,10 +1,11 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
-import graft.queries.Analytics
+import graft.queries.{Analytics, Breadth, Extensions, Query}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Aggregates the query surface from the per-area modules:
+/** The engine's query contract (SURVEY.md §7): the query surface of the per-area
+  * modules. Each module lists its queries once, in its `registry`; the
+  * `queries`, `oracleSql` and `rowsOnly` views below are derived from the
+  * joined list, so a query and its oracle cannot be registered apart.
   *   - [[graft.queries.Analytics]] — reference-parity relational operators
   *     (SURVEY.md §2.2–2.6) phrased over the star schema with DuckDB oracles.
   */
@@ -15,28 +16,33 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Analytics.q09GoldJoin(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2, plus the
+  /** `qs` unchanged, or an IllegalArgumentException naming every query
+    * registered more than once: a map built from the list would silently
+    * keep only one of them. */
+  def unique(qs: Seq[Query]): Seq[Query] = {
+    val repeated = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(repeated.isEmpty,
+      s"queries registered more than once: ${repeated.toSeq.sorted.mkString(", ")}")
+    qs
+  }
+
+  /** Every implemented operator from SURVEY.md §2, plus the
     * training-data-pipeline extensions (dedup / similarity / text / events). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Analytics.queries ++ graft.queries.Extensions.queries ++ graft.queries.Breadth.queries
+  val registry: Seq[Query] =
+    unique(Analytics.registry ++ Extensions.registry ++ Breadth.registry)
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    Analytics.oracleSql ++ graft.queries.Extensions.oracleSql ++ graft.queries.Breadth.oracleSql
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
-  /** Queries with NO DuckDB oracle, each by documented necessity and each
-    * carrying an exact ScalaTest oracle instead:
-    *   - x22: seeded reservoir plan — sampling is engine-specific by nature;
-    *     ReservoirSpec pins the 200-seed uniformity contract.
-    *   - x141: deflate ratio — no SQL engine exposes DEFLATE; MiningSpec
-    *     replays the JVM Deflater row by row.
-    * (x15 multimodal left this list in r9: its projected columns are pure
-    * byte arithmetic and now carry a real DuckDB oracle; the non-SQL stub
-    * outputs stay pinned by MultimodalSpec.)
-    * The registration gate (RegistrationGateSpec) forces every other query
-    * to carry a SQL oracle — a query can never again ship dark the way
-    * x152 did in round 8. */
-  def rowsOnly: Set[String] =
-    Set("x22_reservoir_sample", "x141_compression_ratio")
+  /** For each oracled query, equivalent ANSI SQL runnable by DuckDB on the
+    * same parquet tables. */
+  val oracleSql: Map[String, String] =
+    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** Queries with NO DuckDB oracle (x22 and x141), each by documented
+    * necessity beside its registry entry and each carrying an exact
+    * ScalaTest oracle instead. RegistrationGateSpec keeps this set small,
+    * so a query can never again ship dark the way x152 did in round 8. */
+  val rowsOnly: Set[String] =
+    registry.filter(_.oracle.isEmpty).map(_.name).toSet
 }

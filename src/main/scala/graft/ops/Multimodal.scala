@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary` columns
   * with typed metadata, plus decode / feature-extract / resize / frame-sample
@@ -28,12 +27,6 @@ object Multimodal {
   // default — per-row temp-file churn on every executor thread. Pixels this
   // small belong in memory; flip it once per JVM before any codec call.
   private lazy val imageIoInit: Unit = javax.imageio.ImageIO.setUseCache(false)
-
-  /** Typed metadata carried beside every binary payload. */
-  val mediaMetaType: StructType = StructType(Seq(
-    StructField("mime", StringType),
-    StructField("n_bytes", LongType),
-    StructField("checksum", LongType)))
 
   /** Wrap any table into the media schema, payload = utf-8 bytes of a text
     * column (the stand-in for real image/audio bytes in this container). */

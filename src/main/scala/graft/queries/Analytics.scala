@@ -333,37 +333,20 @@ object Analytics {
        |GROUP BY l_returnflag, l_linestatus
        |ORDER BY l_returnflag, l_linestatus""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_filter_project" -> q01FilterProject _,
-    "q02_try_cast" -> q02TryCast _,
-    "q03_horizontal_sum" -> q03HorizontalSum _,
-    "q04_guarded_div" -> q04GuardedDiv _,
-    "q05_string_norm" -> q05StringNorm _,
-    "q06_rollup_mean_nunique" -> q06RollupMeanNunique _,
-    "q07_left_join" -> q07LeftJoin _,
-    "q08_dedup_keepfirst" -> q08DedupKeepFirst _,
-    "q09_gold_join" -> q09GoldJoin _,
-    "q10_top1_asc" -> q10Top1Asc _,
-    "q11_topk_desc" -> q11TopKDesc _,
-    "q12_rank_sum" -> q12RankSum _,
-    "q13_count" -> q13Count _,
-    "q14_limit" -> q14Limit _,
-    "q15_pricing_summary" -> q15PricingSummary _)
-
-  val oracleSql: Map[String, String] = Map(
-    "q01_filter_project" -> q01Sql,
-    "q02_try_cast" -> q02Sql,
-    "q03_horizontal_sum" -> q03Sql,
-    "q04_guarded_div" -> q04Sql,
-    "q05_string_norm" -> q05Sql,
-    "q06_rollup_mean_nunique" -> q06Sql,
-    "q07_left_join" -> q07Sql,
-    "q08_dedup_keepfirst" -> q08Sql,
-    "q09_gold_join" -> q09Sql,
-    "q10_top1_asc" -> q10Sql,
-    "q11_topk_desc" -> q11Sql,
-    "q12_rank_sum" -> q12Sql,
-    "q13_count" -> q13Sql,
-    "q14_limit" -> q14Sql,
-    "q15_pricing_summary" -> q15Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q01_filter_project", q01FilterProject, Some(q01Sql)),
+    Query("q02_try_cast", q02TryCast, Some(q02Sql)),
+    Query("q03_horizontal_sum", q03HorizontalSum, Some(q03Sql)),
+    Query("q04_guarded_div", q04GuardedDiv, Some(q04Sql)),
+    Query("q05_string_norm", q05StringNorm, Some(q05Sql)),
+    Query("q06_rollup_mean_nunique", q06RollupMeanNunique, Some(q06Sql)),
+    Query("q07_left_join", q07LeftJoin, Some(q07Sql)),
+    Query("q08_dedup_keepfirst", q08DedupKeepFirst, Some(q08Sql)),
+    Query("q09_gold_join", q09GoldJoin, Some(q09Sql)),
+    Query("q10_top1_asc", q10Top1Asc, Some(q10Sql)),
+    Query("q11_topk_desc", q11TopKDesc, Some(q11Sql)),
+    Query("q12_rank_sum", q12RankSum, Some(q12Sql)),
+    Query("q13_count", q13Count, Some(q13Sql)),
+    Query("q14_limit", q14Limit, Some(q14Sql)),
+    Query("q15_pricing_summary", q15PricingSummary, Some(q15Sql)))
 }

@@ -738,57 +738,30 @@ object Breadth {
       |  (SELECT count(DISTINCT o_orderdate) FROM orders) FROM f
       |ORDER BY column_name""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q33_full_outer" -> q33FullOuter _,
-    "q34_map_funcs" -> q34MapFuncs _,
-    "x36_upsert" -> x36Upsert _,
-    "x37_histogram" -> x37Histogram _,
-    "x38_column_profile" -> x38ColumnProfile _,
-    "q19_string_funcs" -> q19StringFuncs _,
-    "q20_bigjoin_revenue" -> q20BigJoinRevenue _,
-    "q21_semi_anti" -> q21SemiAnti _,
-    "q22_sketches" -> q22Sketches _,
-    "q23_correlated_subquery" -> q23CorrelatedSubquery _,
-    "q24_token_explode" -> q24TokenExplode _,
-    "q16_rollup" -> q16Rollup _,
-    "q17_set_ops" -> q17SetOps _,
-    "q25_fuzzy_match" -> q25FuzzyMatch _,
-    "q26_datetime" -> q26Datetime _,
-    "q27_grouping_sets" -> q27GroupingSets _,
-    "q28_array_fold" -> q28ArrayFold _,
-    "q29_exact_percentile" -> q29ExactPercentile _,
-    "q30_pivot" -> q30Pivot _,
-    "q31_unpivot" -> q31Unpivot _,
-    "q32_ranking_windows" -> q32RankingWindows _,
-    "q18_window_analytics" -> q18WindowAnalytics _,
-    "x16_asof_join" -> x16AsofJoin _,
-    "x19_topk_agg" -> x19TopKAgg _,
-    "x21_range_join" -> x21RangeJoin _)
-
-  val oracleSql: Map[String, String] = Map(
-    "q33_full_outer" -> q33Sql,
-    "q34_map_funcs" -> q34Sql,
-    "x36_upsert" -> x36Sql,
-    "x37_histogram" -> x37Sql,
-    "x38_column_profile" -> x38Sql,
-    "q19_string_funcs" -> q19Sql,
-    "q20_bigjoin_revenue" -> q20Sql,
-    "q22_sketches" -> q22Sql,
-    "q21_semi_anti" -> q21Sql,
-    "q23_correlated_subquery" -> q23Sql,
-    "q24_token_explode" -> q24Sql,
-    "q16_rollup" -> q16Sql,
-    "q17_set_ops" -> q17Sql,
-    "q25_fuzzy_match" -> q25Sql,
-    "q26_datetime" -> q26Sql,
-    "q27_grouping_sets" -> q27Sql,
-    "q28_array_fold" -> q28Sql,
-    "q29_exact_percentile" -> q29Sql,
-    "q30_pivot" -> q30Sql,
-    "q31_unpivot" -> q31Sql,
-    "q32_ranking_windows" -> q32Sql,
-    "q18_window_analytics" -> q18Sql,
-    "x16_asof_join" -> x16Sql,
-    "x19_topk_agg" -> x19Sql,
-    "x21_range_join" -> x21Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q33_full_outer", q33FullOuter, Some(q33Sql)),
+    Query("q34_map_funcs", q34MapFuncs, Some(q34Sql)),
+    Query("x36_upsert", x36Upsert, Some(x36Sql)),
+    Query("x37_histogram", x37Histogram, Some(x37Sql)),
+    Query("x38_column_profile", x38ColumnProfile, Some(x38Sql)),
+    Query("q19_string_funcs", q19StringFuncs, Some(q19Sql)),
+    Query("q20_bigjoin_revenue", q20BigJoinRevenue, Some(q20Sql)),
+    Query("q21_semi_anti", q21SemiAnti, Some(q21Sql)),
+    Query("q22_sketches", q22Sketches, Some(q22Sql)),
+    Query("q23_correlated_subquery", q23CorrelatedSubquery, Some(q23Sql)),
+    Query("q24_token_explode", q24TokenExplode, Some(q24Sql)),
+    Query("q16_rollup", q16Rollup, Some(q16Sql)),
+    Query("q17_set_ops", q17SetOps, Some(q17Sql)),
+    Query("q25_fuzzy_match", q25FuzzyMatch, Some(q25Sql)),
+    Query("q26_datetime", q26Datetime, Some(q26Sql)),
+    Query("q27_grouping_sets", q27GroupingSets, Some(q27Sql)),
+    Query("q28_array_fold", q28ArrayFold, Some(q28Sql)),
+    Query("q29_exact_percentile", q29ExactPercentile, Some(q29Sql)),
+    Query("q30_pivot", q30Pivot, Some(q30Sql)),
+    Query("q31_unpivot", q31Unpivot, Some(q31Sql)),
+    Query("q32_ranking_windows", q32RankingWindows, Some(q32Sql)),
+    Query("q18_window_analytics", q18WindowAnalytics, Some(q18Sql)),
+    Query("x16_asof_join", x16AsofJoin, Some(x16Sql)),
+    Query("x19_topk_agg", x19TopKAgg, Some(x19Sql)),
+    Query("x21_range_join", x21RangeJoin, Some(x21Sql)))
 }

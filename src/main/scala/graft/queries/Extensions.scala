@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.ops.{Curation, Dedup, Itemsets, Multimodal, Similarity, Stats, TextAnalysis}
+import graft.ops.{Curation, Dedup, Itemsets, Multimodal, SharedViews, Similarity, Stats, TextAnalysis}
 
 /** Training-data-pipeline extension operators (build brief: dedup, similarity
   * search, text analysis, event streams) as driver-checkable queries.
@@ -29,7 +29,7 @@ object Extensions {
     * therefore its MARGINAL cost given the materialized pair view; the
     * one-time build is [[graft.ops.Dedup.ngramJaccardPairs]]. */
   private def ngramPairGraph(s: SparkSession, dir: String): DataFrame =
-    graft.ops.SharedViews.materialized(s, s"ngram_pairs_k3_t0.5/$dir") {
+    SharedViews.materialized(s, s"ngram_pairs_k3_t0.5/$dir") {
       // widen the corpus before the one-time pair mine (guide §2.5): the
       // single-split local scan would otherwise shingle-hash the whole
       // corpus serially; no-op on a well-partitioned input
@@ -48,7 +48,7 @@ object Extensions {
     * works standalone on raw text — this view only changes what the query
     * layer feeds them. */
   private def tokDocs(s: SparkSession, dir: String): DataFrame =
-    graft.ops.SharedViews.materialized(s, s"tokenized_docs/$dir") {
+    SharedViews.materialized(s, s"tokenized_docs/$dir") {
       import org.apache.spark.sql.functions.col
       // widen BEFORE tokenizing (guide §2.5): a single-split corpus would
       // otherwise checkpoint ONE partition, serializing the first map stage
@@ -66,7 +66,7 @@ object Extensions {
     * consumer's cost is marginal given the materialized relation — the
     * same production shape as [[ngramPairGraph]]. */
   private def coPurchaseBaskets(s: SparkSession, dir: String): DataFrame =
-    graft.ops.SharedViews.materialized(s, s"copurchase_baskets/$dir") {
+    SharedViews.materialized(s, s"copurchase_baskets/$dir") {
       import org.apache.spark.sql.functions.col
       Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
@@ -82,7 +82,7 @@ object Extensions {
     * (x127 opts into [[graft.ops.Graph.linkPrediction]]'s normalized-input
     * contract; x112/x114's driver legs dedup in their probe sets). */
   private def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
-    graft.ops.SharedViews.materialized(s, s"copurchase_edges/$dir") {
+    SharedViews.materialized(s, s"copurchase_edges/$dir") {
       import org.apache.spark.sql.functions.col
       val li = coPurchaseBaskets(s, dir)
       li.as("x").join(li.as("y"),
@@ -4629,7 +4629,7 @@ object Extensions {
   /** CC labels over [[ngramPairGraph]] — materialized once per session/
     * corpus (x28 report, x154 size distribution both read them). */
   private def ngramClusters(s: SparkSession, dir: String): DataFrame =
-    graft.ops.SharedViews.materialized(s, s"ngram_cc/$dir") {
+    SharedViews.materialized(s, s"ngram_cc/$dir") {
       Dedup.nearDupClusters(ngramPairGraph(s, dir))
     }
 
@@ -5269,7 +5269,7 @@ object Extensions {
     * to DuckDB's 0.03 s COPY is the two-job launch floor, accepted. */
   def x55OrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tmp = roundTripDir(s, "graft_x55_orc")
+    val tmp = tempDir(s, "graft_x55_orc")
     graft.io.Lake.writeOrc(
       Tables.load(s, dir, "orders")
         .select($"o_orderkey", $"o_custkey", $"o_totalprice", $"o_orderpriority"),
@@ -5336,7 +5336,7 @@ object Extensions {
     * crossing it. */
   def x57JsonlRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tmp = roundTripDir(s, "graft_x57_jsonl")
+    val tmp = tempDir(s, "graft_x57_jsonl")
     val src = docs(s, dir)
     src.write.mode("overwrite").json(tmp)
     s.read.schema(src.schema).json(tmp)
@@ -5705,7 +5705,7 @@ object Extensions {
   def x69SchemaEvolution(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ev = Tables.events(s, dir)
-    val tmp = roundTripDir(s, "graft_x69_evo")
+    val tmp = tempDir(s, "graft_x69_evo")
     ev.filter($"event_id" % 2 === 0)
       .select($"event_id", $"user_id", $"event_type")
       .write.mode("overwrite").parquet(tmp)
@@ -5840,13 +5840,11 @@ object Extensions {
     * oracle instead of only ScalaTest specs. The index is built once per
     * (session, corpus) — the production amortization shape, same as
     * [[ngramPairGraph]] — so the timed marginal cost is the per-batch scoring. */
-  private val x199Indexes =
-    new SessionIndexCache[graft.streaming.DedupStreams.AdmissionIndex]
   def x199AdmissionTwin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d = docs(s, dir)
-    val idx = x199Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x199idx")
+    val idx = SharedViews.memo(s, s"x199_index/$dir") {
+      val idxDir = tempDir(s, "x199idx")
       graft.streaming.DedupStreams.buildAdmissionIndex(
         d.filter($"doc_id" % 10 < 8), "doc_id", "text", idxDir,
         shingleK = 3, threshold = 0.5)
@@ -5885,13 +5883,22 @@ object Extensions {
       |WHERE d.doc_id % 10 >= 8
       |ORDER BY d.doc_id""".stripMargin
 
-  /** A fresh directory for one call's format round trip, so concurrent
-    * sessions never share one. The returned frame reads it lazily, so it
-    * is deleted when its FileSystem closes (at JVM exit), not here. */
-  private def roundTripDir(s: SparkSession, prefix: String): String = {
-    val dir = new org.apache.hadoop.fs.Path(java.nio.file.Files.createTempDirectory(prefix).toUri)
-    dir.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(dir)
-    dir.toString
+  /** A fresh directory per call, so concurrent sessions never share one:
+    * x55/x57/x69's format round trips and the twins' on-disk indexes. It is
+    * FILE-URI-SPELLED (r16 verdict #6): every oracled twin builds its index
+    * at the explicit `file://`-qualified path
+    * [[graft.streaming.DiskIndex.qualifiedUri]] resolves — the same
+    * scheme-clean discipline the engine guarantees on the lake — so the
+    * twins exercise qualified-URI pathing through the full
+    * build/append/serve cycle instead of only ever seeing bare local
+    * paths. The frames and indexes over it read it lazily, so it is
+    * deleted when its FileSystem closes (at JVM exit), not here. */
+  private[graft] def tempDir(s: SparkSession, prefix: String): String = {
+    val dir = graft.streaming.DiskIndex.qualifiedUri(s,
+      java.nio.file.Files.createTempDirectory(prefix).toString)
+    val path = new org.apache.hadoop.fs.Path(dir)
+    path.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(path)
+    dir
   }
 
   // ------------------------------------- x201 streaming-ANN-serving batch twin
@@ -5908,38 +5915,11 @@ object Extensions {
     * float. Production serves through `trained = true`; its recall/nprobe
     * curve is quantified by x188 — this query pins the serve PLAN's
     * exactness given a quantizer. */
-  /** Per-(session, dir) index cache for the serve/admission twins, WEAK on
-    * the session: a stopped session's index handles (DataFrames bound to
-    * it) become collectable instead of accumulating for the JVM lifetime,
-    * and — unlike an identityHashCode key — a new session can never collide
-    * into a dead session's entry. */
-  /** Fixture index locations are FILE-URI-SPELLED (r16 verdict #6): every
-    * oracled twin builds its index at the explicit `file://`-qualified
-    * path [[graft.streaming.DiskIndex.qualifiedUri]] resolves — the same
-    * scheme-clean discipline the engine guarantees on the lake — so the
-    * ten twins exercise qualified-URI pathing through the full
-    * build/append/serve cycle instead of only ever seeing bare local
-    * paths. */
-  private def fixtureIndexDir(s: SparkSession, prefix: String): String =
-    graft.streaming.DiskIndex.qualifiedUri(s,
-      java.nio.file.Files.createTempDirectory(prefix).toString)
-
-  private final class SessionIndexCache[T] {
-    private val bySession = new java.util.WeakHashMap[
-      SparkSession, scala.collection.mutable.Map[String, T]]()
-    def getOrBuild(s: SparkSession, dir: String)(build: => T): T = synchronized {
-      val m = bySession.computeIfAbsent(s,
-        _ => scala.collection.mutable.Map.empty[String, T])
-      m.getOrElseUpdate(dir, build)
-    }
-  }
-  private val x201Indexes =
-    new SessionIndexCache[graft.streaming.AnnStreams.ServingIndex]
   def x201AnnServeTwin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = emb(s, dir)
-    val idx = x201Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x201idx")
+    val idx = SharedViews.memo(s, s"x201_index/$dir") {
+      val idxDir = tempDir(s, "x201idx")
       graft.streaming.AnnStreams.buildServingIndex(
         e.filter($"vec_id" % 10 < 8), "vec_id", "embedding", idxDir,
         nlist = 8, trained = false)
@@ -6008,14 +5988,12 @@ object Extensions {
     * duplicated a batch, or re-derived centroids breaks the hash. Seeded
     * quantizer (`trained = false` over the BASE slice) for the same
     * reason as x201: every number replays in plain SQL. */
-  private val x202Indexes = new SessionIndexCache[
-    (graft.streaming.AnnStreams.ServingIndex, graft.streaming.AnnStreams.ServingIndex)]
   def x202CompactionTwin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.streaming.AnnStreams
     val e = emb(s, dir)
-    val (oldIdx, newIdx) = x202Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x202idx")
+    val (oldIdx, newIdx) = SharedViews.memo(s, s"x202_index/$dir") {
+      val idxDir = tempDir(s, "x202idx")
       val built = AnnStreams.buildServingIndex(
         e.filter($"vec_id" % 10 < 7), "vec_id", "embedding", s"$idxDir/blue",
         nlist = 8, trained = false)
@@ -6087,13 +6065,11 @@ object Extensions {
     * quantized instead of float values all break the hash. Directly
     * comparable to x201: same queries, same index geometry, the only
     * difference is the int8 shortlist cut. */
-  private val x203Indexes =
-    new SessionIndexCache[graft.streaming.AnnStreams.QuantizedIndex]
   def x203QuantizedServe(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = emb(s, dir)
-    val idx = x203Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x203idx")
+    val idx = SharedViews.memo(s, s"x203_index/$dir") {
+      val idxDir = tempDir(s, "x203idx")
       graft.streaming.AnnStreams.buildQuantizedIndex(
         e.filter($"vec_id" % 10 < 8), "vec_id", "embedding", idxDir,
         nlist = 8, trained = false)
@@ -6166,14 +6142,12 @@ object Extensions {
     * the tail float table — a tail landed without its floats, a branch
     * dropped, or a compaction that re-quantized would all break the hash
     * against the one-corpus DuckDB replay. */
-  private val x205Indexes = new SessionIndexCache[
-    (graft.streaming.AnnStreams.QuantizedIndex, graft.streaming.AnnStreams.QuantizedIndex)]
   def x205QuantizedAppendTwin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.streaming.AnnStreams
     val e = emb(s, dir)
-    val (oldIdx, newIdx) = x205Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x205idx")
+    val (oldIdx, newIdx) = SharedViews.memo(s, s"x205_index/$dir") {
+      val idxDir = tempDir(s, "x205idx")
       val built = AnnStreams.buildQuantizedIndex(
         e.filter($"vec_id" % 10 < 7), "vec_id", "embedding", s"$idxDir/blue",
         nlist = 8, trained = false)
@@ -6256,14 +6230,12 @@ object Extensions {
     * stripe enters the quantizer). A retrain that carried centroids over,
     * lost or duplicated a vector while folding the tail, or derived the
     * new quantizer from anything but the combined corpus breaks the hash. */
-  private val x206Indexes = new SessionIndexCache[
-    (graft.streaming.AnnStreams.ServingIndex, graft.streaming.AnnStreams.ServingIndex)]
   def x206RetrainTwin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.streaming.AnnStreams
     val e = emb(s, dir)
-    val (oldIdx, newIdx) = x206Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x206idx")
+    val (oldIdx, newIdx) = SharedViews.memo(s, s"x206_index/$dir") {
+      val idxDir = tempDir(s, "x206idx")
       val built = AnnStreams.buildServingIndex(
         e.filter($"vec_id" % 10 < 7), "vec_id", "embedding", s"$idxDir/blue",
         nlist = 8, trained = false)
@@ -6340,14 +6312,12 @@ object Extensions {
     * codes would serve a different shortlist and break the hash. Only the
     * quantizer (and therefore cell membership and the shortlist cut)
     * differs between the legs. */
-  private val x207Indexes = new SessionIndexCache[
-    (graft.streaming.AnnStreams.QuantizedIndex, graft.streaming.AnnStreams.QuantizedIndex)]
   def x207QuantizedRetrainTwin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.streaming.AnnStreams
     val e = emb(s, dir)
-    val (oldIdx, newIdx) = x207Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x207idx")
+    val (oldIdx, newIdx) = SharedViews.memo(s, s"x207_index/$dir") {
+      val idxDir = tempDir(s, "x207idx")
       val built = AnnStreams.buildQuantizedIndex(
         e.filter($"vec_id" % 10 < 7), "vec_id", "embedding", s"$idxDir/blue",
         nlist = 8, trained = false)
@@ -6437,14 +6407,12 @@ object Extensions {
     * seeded closed form and aggregates with the same integer arithmetic —
     * a wrong assignment, a tail health read off the wrong branch, or a
     * share computed against the wrong denominator all break the hash. */
-  private val x208Indexes =
-    new SessionIndexCache[graft.streaming.AnnStreams.ServingIndex]
   def x208IndexHealth(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.streaming.AnnStreams
     val e = emb(s, dir)
-    val idx = x208Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x208idx")
+    val idx = SharedViews.memo(s, s"x208_index/$dir") {
+      val idxDir = tempDir(s, "x208idx")
       val built = AnnStreams.buildServingIndex(
         e.filter($"vec_id" % 10 < 7), "vec_id", "embedding", idxDir,
         nlist = 8, trained = false)
@@ -6493,14 +6461,12 @@ object Extensions {
     * through the wrong scale rule, measured fitness under a different
     * metric than the serve path, or read the wrong branch breaks the
     * hash. */
-  private val x209Indexes =
-    new SessionIndexCache[graft.streaming.AnnStreams.QuantizedIndex]
   def x209QuantizedHealth(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.streaming.AnnStreams
     val e = emb(s, dir)
-    val idx = x209Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x209idx")
+    val idx = SharedViews.memo(s, s"x209_index/$dir") {
+      val idxDir = tempDir(s, "x209idx")
       val built = AnnStreams.buildQuantizedIndex(
         e.filter($"vec_id" % 10 < 7), "vec_id", "embedding", idxDir,
         nlist = 8, trained = false)
@@ -6547,6 +6513,25 @@ object Extensions {
       |FROM cells GROUP BY leg ORDER BY leg""".stripMargin
 
   // -------------------------------- x210 admission index health (hot-order)
+  private val x210Boiler =
+    "standard corporate disclaimer header applies to this entire document"
+  /** x210's fixture index, which x212 reads too: the base half, then the
+    * boiler-prefixed stripe landed through the append path. Neither query
+    * writes to it, so it is built once per (session, corpus) for both. */
+  private def x210Index(s: SparkSession, dir: String): graft.streaming.DedupStreams.AdmissionIndex =
+    SharedViews.memo(s, s"x210_index/$dir") {
+      import s.implicits._
+      import graft.streaming.DedupStreams
+      val d = docs(s, dir)
+      val idxDir = tempDir(s, "x210idx")
+      val built = DedupStreams.buildAdmissionIndex(
+        d.filter($"doc_id" % 10 < 5), "doc_id", "text", idxDir)
+      DedupStreams.landAppendBatch(
+        d.filter($"doc_id" % 10 === 7)
+          .select($"doc_id", concat(lit(x210Boiler + " "), $"text").as("text")),
+        built, "doc_id", "text", batchId = 0L)
+      DedupStreams.openAdmissionIndex(s, idxDir)
+    }
   /** [[graft.streaming.DedupStreams.admissionHealth]] oracled: the
     * scheduling signal behind [[graft.streaming.DedupStreams
     * .reindexAdmission]] — per branch, the document count and the
@@ -6565,26 +6550,8 @@ object Extensions {
     * exact at the correctness gate's scale by design). A health that
     * read the wrong branch, misapplied the hot filter, or drifted from
     * the C(n,2) integer arithmetic breaks the hash. */
-  private val x210Indexes =
-    new SessionIndexCache[graft.streaming.DedupStreams.AdmissionIndex]
-  private val x210Boiler =
-    "standard corporate disclaimer header applies to this entire document"
-  def x210AdmissionHealth(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.streaming.DedupStreams
-    val d = docs(s, dir)
-    val idx = x210Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x210idx")
-      val built = DedupStreams.buildAdmissionIndex(
-        d.filter($"doc_id" % 10 < 5), "doc_id", "text", idxDir)
-      DedupStreams.landAppendBatch(
-        d.filter($"doc_id" % 10 === 7)
-          .select($"doc_id", concat(lit(x210Boiler + " "), $"text").as("text")),
-        built, "doc_id", "text", batchId = 0L)
-      DedupStreams.openAdmissionIndex(s, idxDir)
-    }
-    DedupStreams.admissionHealth(idx)
-  }
+  def x210AdmissionHealth(s: SparkSession, dir: String): DataFrame =
+    graft.streaming.DedupStreams.admissionHealth(x210Index(s, dir))
   /** The x210 health CTE chain up through the per-leg report — ONE spelling
     * shared by x210 (the report) and x212 (the decision over it), so the
     * two replays cannot drift apart. Ends with `health(leg, n_docs,
@@ -6640,22 +6607,10 @@ object Extensions {
     * fire TRUE at the gate fixture (measured: tail 20% of base; tail mass
     * ~1.7e11 ppm against a 1e8 bar), so the oracle pins the firing
     * arithmetic, not vacuous FALSEs. */
-  private val x212Indexes =
-    new SessionIndexCache[graft.streaming.DedupStreams.AdmissionIndex]
   def x212AdmissionPlan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.streaming.DedupStreams
-    val d = docs(s, dir)
-    val idx = x212Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x212idx")
-      val built = DedupStreams.buildAdmissionIndex(
-        d.filter($"doc_id" % 10 < 5), "doc_id", "text", idxDir)
-      DedupStreams.landAppendBatch(
-        d.filter($"doc_id" % 10 === 7)
-          .select($"doc_id", concat(lit(x210Boiler + " "), $"text").as("text")),
-        built, "doc_id", "text", batchId = 0L)
-      DedupStreams.openAdmissionIndex(s, idxDir)
-    }
+    val idx = x210Index(s, dir)
     // run the health plan ONCE: the decision helper and the leg counts
     // both read the collected 2-row report through a LocalRelation instead
     // of re-executing the index-mass aggregation per consumer (r19)
@@ -6705,14 +6660,12 @@ object Extensions {
     * correctly rounded in both engines). A health read off the wrong
     * branch, a drifted threshold constant, truncate-vs-floor drift, or a
     * mis-clamped geometry all break the hash. */
-  private val x211Indexes =
-    new SessionIndexCache[graft.streaming.AnnStreams.ServingIndex]
   def x211MaintenancePlan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.streaming.AnnStreams
     val e = emb(s, dir)
-    val idx = x211Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x211idx")
+    val idx = SharedViews.memo(s, s"x211_index/$dir") {
+      val idxDir = tempDir(s, "x211idx")
       val built = AnnStreams.buildServingIndex(
         e.filter($"vec_id" % 10 < 7), "vec_id", "embedding", idxDir,
         nlist = 8, trained = false)
@@ -7518,417 +7471,215 @@ object Extensions {
       |  CAST(length(s) AS INT) AS n_sent_chars
       |FROM t WHERE length(s) > 0 ORDER BY doc_id, sent_idx""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x152_linkage_weights" -> x152LinkageWeights _,
-    "x153_entity_resolution" -> x153EntityResolution _,
-    "x154_cluster_sizes" -> x154ClusterSizes _,
-    "x155_source_dup_matrix" -> x155SourceDupMatrix _,
-    "x156_gate_ablation" -> x156GateAblation _,
-    "x157_attribution" -> x157Attribution _,
-    "x158_column_profile" -> x158ColumnProfile _,
-    "x159_source_containment" -> x159SourceContainment _,
-    "x160_heaps_fit" -> x160HeapsFit _,
-    "x161_effective_sample_size" -> x161EffectiveSampleSize _,
-    "x162_stickiness" -> x162Stickiness _,
-    "x163_skipgram_pmi" -> x163SkipgramPmi _,
-    "x164_pareto_report" -> x164ParetoReport _,
-    "x165_effective_dim" -> x165EffectiveDim _,
-    "x166_centroid_confusion" -> x166CentroidConfusion _,
-    "x167_transitions" -> x167Transitions _,
-    "x168_readability" -> x168Readability _,
-    "x169_char_classes" -> x169CharClasses _,
-    "x170_pr_curve" -> x170PrCurve _,
-    "x171_boilerplate_ngrams" -> x171BoilerplateNgrams _,
-    "x172_lang_entropy" -> x172LangEntropy _,
-    "x173_burstiness" -> x173Burstiness _,
-    "x174_ivm_rollup" -> x174IvmRollup _,
-    "x175_jaccard_histogram" -> x175JaccardHistogram _,
-    "x176_ab_test" -> x176AbTest _,
-    "x177_fold_stratification" -> x177FoldStratification _,
-    "x178_ship_delay" -> x178ShipDelay _,
-    "x179_seeded_sample" -> x179SeededSample _,
-    "x180_fold_contamination" -> x180FoldContamination _,
-    "x181_packing_curve" -> x181PackingCurve _,
-    "x182_cluster_split" -> x182ClusterSplit _,
-    "x183_retrieval_eval" -> x183RetrievalEval _,
-    "x184_transition_entropy" -> x184TransitionEntropy _,
-    "x185_hapax_ratio" -> x185HapaxRatio _,
-    "x186_conversion_survival" -> x186ConversionSurvival _,
-    "x187_reservoir_pq" -> x187ReservoirPq _,
-    "x188_ivf_recall" -> x188IvfRecall _,
-    "x189_deflate_input" -> x189DeflateInput _,
-    "x196_minhash_oph" -> x196MinhashOph _,
-    "x195_wav_stats" -> x195WavStats _,
-    "x197_codec_contract" -> x197CodecContract _,
-    "x198_oph_short_recall" -> x198OphShortRecall _,
-    "x199_admission_twin" -> x199AdmissionTwin _,
-    "x200_image_neardup" -> x200ImageNeardup _,
-    "x201_ann_serve_twin" -> x201AnnServeTwin _,
-    "x202_compaction_twin" -> x202CompactionTwin _,
-    "x203_quantized_serve" -> x203QuantizedServe _,
-    "x204_clip_neardup" -> x204ClipNeardup _,
-    "x205_quantized_append_twin" -> x205QuantizedAppendTwin _,
-    "x206_retrain_twin" -> x206RetrainTwin _,
-    "x207_quantized_retrain_twin" -> x207QuantizedRetrainTwin _,
-    "x208_index_health" -> x208IndexHealth _,
-    "x209_quantized_health" -> x209QuantizedHealth _,
-    "x210_admission_health" -> x210AdmissionHealth _,
-    "x211_maintenance_plan" -> x211MaintenancePlan _,
-    "x212_admission_plan" -> x212AdmissionPlan _,
-    "x194_gif_frames" -> x194GifFrames _,
-    "x193_pixel_resize" -> x193PixelResize _,
-    "x192_manku_recall" -> x192MankuRecall _,
-    "x191_pixel_stats" -> x191PixelStats _,
-    "x190_simhash_recall" -> x190SimhashRecall _,
-    "x151_ucb_mixture" -> x151UcbMixture _,
-    "x150_snapshot_diff" -> x150SnapshotDiff _,
-    "x149_mutual_info" -> x149MutualInfo _,
-    "x148_benford" -> x148Benford _,
-    "x147_silhouette" -> x147Silhouette _,
-    "x146_perplexity_buckets" -> x146PerplexityBuckets _,
-    "x145_wilson_reorder" -> x145WilsonReorder _,
-    "x144_rfm_segments" -> x144RfmSegments _,
-    "x143_chi_square" -> x143ChiSquare _,
-    "x142_gopher_rules" -> x142GopherRules _,
-    "x141_compression_ratio" -> x141CompressionRatio _,
-    "x140_cohens_kappa" -> x140CohensKappa _,
-    "x139_pit_features" -> x139PitFeatures _,
-    "x138_linear_gapfill" -> x138LinearGapFill _,
-    "x137_seasonal_anomalies" -> x137SeasonalAnomalies _,
-    "x136_contract_report" -> x136ContractReport _,
-    "x135_k_anonymity" -> x135KAnonymity _,
-    "x134_quantile_map" -> x134QuantileMap _,
-    "x133_sequence_windows" -> x133SequenceWindows _,
-    "x132_layout_audit" -> x132LayoutAudit _,
-    "x131_compaction_plan" -> x131CompactionPlan _,
-    "x130_tfidf_pairs" -> x130TfIdfPairs _,
-    "x129_gini_stump" -> x129GiniStump _,
-    "x128_temperature_mix" -> x128TempMix _,
-    "x127_link_prediction" -> x127LinkPrediction _,
-    "x126_weighted_median" -> x126WeightedMedian _,
-    "x125_decayed_popularity" -> x125DecayedPopularity _,
-    "x124_hll_overlap" -> x124HllOverlap _,
-    "x123_attribution" -> x123Attribution _,
-    "x122_kcenter" -> x122KCenter _,
-    "x121_ols_trend" -> x121OlsTrend _,
-    "x120_window_dedup" -> x120WindowDedup _,
-    "x119_sorted_neighborhood" -> x119SortedNeighborhood _,
-    "x118_bpe_encode" -> x118BpeEncode _,
-    "x117_priority_sample" -> x117PrioritySample _,
-    "x116_hybrid_rrf" -> x116HybridRrf _,
-    "x115_changepoint" -> x115Changepoint _,
-    "x114_label_prop" -> x114LabelProp _,
-    "x113_frequent_pairs" -> x113FrequentPairs _,
-    "x112_triangle_census" -> x112CoPurchaseTriangles _,
-    "x111_calibration" -> x111Calibration _,
-    "x110_rebalance_plan" -> x110RebalancePlan _,
-    "x109_exactsubstr_strip" -> x109ExactSubstrStrip _,
-    "x108_eigenvector" -> x108Eigenvector _,
-    "x107_scd2_merge" -> x107Scd2Merge _,
-    "x106_skew_report" -> x106SkewReport _,
-    "x105_fk_profile" -> x105FkProfile _,
-    "x104_bpe_merges" -> x104BpeMerges _,
-    "x103_covariance" -> x103Covariance _,
-    "x102_log_quantiles" -> x102LogQuantiles _,
-    "x101_lsh_tuning" -> x101LshTuning _,
-    "x100_score_auc" -> x100ScoreAuc _,
-    "x99_hll_distinct" -> x99HllUsers _,
-    "x98_kmeans" -> x98Kmeans _,
-    "x97_tombstone_read" -> x97TombstoneRead _,
-    "x96_cms_top_tokens" -> x96CmsTopTokens _,
-    "x95_semantic_dedup" -> x95SemanticDedup _,
-    "x94_dsir_select" -> x94DsirSelect _,
-    "x93_bloom_decontaminate" -> x93BloomDecontaminate _,
-    "x89_walk_authority" -> x89WalkAuthority _,
-    "x90_containment" -> x90Containment _,
-    "x91_weighted_jaccard" -> x91WeightedJaccard _,
-    "x92_sentences" -> x92Sentences _,
-    "x87_waterfill_report" -> x87WaterfillReport _,
-    "x88_vocab_coverage" -> x88VocabCoverage _,
-    "x86_quality_dup_curve" -> x86QualityDupCurve _,
-    "x85_embedding_profile" -> x85EmbeddingProfile _,
-    "x82_char_entropy" -> x82CharEntropy _,
-    "x83_zipf_slope" -> x83ZipfSlope _,
-    "x84_length_ks" -> x84LengthKS _,
-    "x79_collocations" -> x79Collocations _,
-    "x80_token_drift" -> x80TokenDrift _,
-    "x81_rate_limit" -> x81RateLimit _,
-    "x75_shingle_novelty" -> x75ShingleNovelty _,
-    "x76_lang_mix" -> x76LangMix _,
-    "x77_char_classes" -> x77CharClasses _,
-    "x78_vocab_growth" -> x78VocabGrowth _,
-    "x74_bm25" -> x74Bm25 _,
-    "x73_incremental_dedup" -> x73IncrementalDedup _,
-    "x70_training_order" -> x70TrainingOrder _,
-    "x71_robust_outliers" -> x71RobustOutliers _,
-    "x72_provenance" -> x72Provenance _,
-    "x67_classifier_score" -> x67ClassifierScore _,
-    "x68_quantized_ann" -> x68QuantizedAnn _,
-    "x69_schema_evolution" -> x69SchemaEvolution _,
-    "x66_dup_report" -> x66DupReport _,
-    "x65_keep_best" -> x65KeepBest _,
-    "x64_sliding_distinct" -> x64SlidingDistinct _,
-    "x63_label_cohesion" -> x63LabelCohesion _,
-    "x62_event_transitions" -> x62EventTransitions _,
-    "x61_split_leakage" -> x61SplitLeakage _,
-    "x60_rolling_window" -> x60RollingWindow _,
-    "x58_gap_fill" -> x58GapFill _,
-    "x59_snapshot_diff" -> x59SnapshotDiff _,
-    "x56_dup_spans" -> x56DupSpans _,
-    "x57_jsonl_roundtrip" -> x57JsonlRoundtrip _,
-    "x54_interval_join_outer" -> x54IntervalJoinOuter _,
-    "x55_orc_roundtrip" -> x55OrcRoundtrip _,
-    "x51_keyword_search" -> x51KeywordSearch _,
-    "x52_conversion_funnel" -> x52ConversionFunnel _,
-    "x53_retention_cohorts" -> x53RetentionCohorts _,
-    "x45_quality_gate" -> x45QualityGate _,
-    "x46_blocklist" -> x46Blocklist _,
-    "x47_incremental_stats" -> x47IncrementalStats _,
-    "x48_salient_terms" -> x48SalientTerms _,
-    "x49_event_enrich" -> x49EventEnrich _,
-    "x50_length_deciles" -> x50LengthDeciles _,
-    "x31_hash_split" -> x31HashSplit _,
-    "x32_stratified_exact" -> x32StratifiedExact _,
-    "x33_filter_funnel" -> x33FilterFunnel _,
-    "x34_group_anomalies" -> x34GroupAnomalies _,
-    "x35_ngram_topk" -> x35NgramTopK _,
-    "x39_source_overlap" -> x39SourceOverlap _,
-    "x40_centroid_outliers" -> x40CentroidOutliers _,
-    "x41_bigram_lm" -> x41BigramLm _,
-    "x42_interval_join" -> x42IntervalJoin _,
-    "x43_doc_chunks" -> x43DocChunks _,
-    "x44_zorder_codes" -> x44ZorderCodes _,
-    "x30_sequence_packing" -> x30SequencePacking _,
-    "x29_boilerplate" -> x29Boilerplate _,
-    "x28_neardup_clusters" -> x28NearDupClusters _,
-    "x15_multimodal" -> x15Multimodal _,
-    "x17_per_source_cap" -> x17PerSourceCap _,
-    "x18_curation" -> x18Curation _,
-    "x01_dedup_exact" -> x01DedupExact _,
-    "x02_token_count" -> x02TokenCount _,
-    "x03_quality_score" -> x03QualityScore _,
-    "x04_lang_id" -> x04LangId _,
-    "x05_fingerprint" -> x05Fingerprint _,
-    "x06_minhash_neardup" -> x06MinhashNearDup _,
-    "x07_simhash_neardup" -> x07SimhashNearDup _,
-    "x08_ngram_jaccard" -> x08NgramJaccard _,
-    "x09_ann_bruteforce" -> x09AnnBruteForce _,
-    "x10_ann_ivf" -> x10AnnIvf _,
-    "x11_embedding_neardup" -> x11EmbeddingNearDup _,
-    "x12_events_window" -> x12EventsWindow _,
-    "x13_sessionize" -> x13Sessionize _,
-    "x14_json_extract" -> x14JsonExtract _,
-    "x20_sliding_window" -> x20SlidingWindow _,
-    "x22_reservoir_sample" -> x22ReservoirSample _,
-    "x23_pii_scrub" -> x23PiiScrub _,
-    "x24_repetition" -> x24Repetition _,
-    "x25_decontaminate" -> x25Decontaminate _,
-    "x26_token_budget_mix" -> x26TokenBudgetMix _,
-    "x27_data_card" -> x27DataCard _)
-
-  val oracleSql: Map[String, String] = Map(
-    "x66_dup_report" -> x66Sql,
-    "x65_keep_best" -> x65Sql,
-    "x64_sliding_distinct" -> x64Sql,
-    "x63_label_cohesion" -> x63Sql,
-    "x62_event_transitions" -> x62Sql,
-    "x61_split_leakage" -> x61Sql,
-    "x60_rolling_window" -> x60Sql,
-    "x58_gap_fill" -> x58Sql,
-    "x59_snapshot_diff" -> x59Sql,
-    "x56_dup_spans" -> x56Sql,
-    "x57_jsonl_roundtrip" -> x57Sql,
-    "x54_interval_join_outer" -> x54Sql,
-    "x55_orc_roundtrip" -> x55Sql,
-    "x51_keyword_search" -> x51Sql,
-    "x52_conversion_funnel" -> x52Sql,
-    "x53_retention_cohorts" -> x53Sql,
-    "x45_quality_gate" -> x45Sql,
-    "x46_blocklist" -> x46Sql,
-    "x47_incremental_stats" -> x47Sql,
-    "x48_salient_terms" -> x48Sql,
-    "x49_event_enrich" -> x49Sql,
-    "x50_length_deciles" -> x50Sql,
-    "x31_hash_split" -> x31Sql,
-    "x32_stratified_exact" -> x32Sql,
-    "x33_filter_funnel" -> x33Sql,
-    "x34_group_anomalies" -> x34Sql,
-    "x35_ngram_topk" -> x35Sql,
-    "x39_source_overlap" -> x39Sql,
-    "x40_centroid_outliers" -> x40Sql,
-    "x41_bigram_lm" -> x41Sql,
-    "x42_interval_join" -> x42Sql,
-    "x43_doc_chunks" -> x43Sql,
-    "x44_zorder_codes" -> x44Sql,
-    "x17_per_source_cap" -> x17Sql,
-    "x18_curation" -> x18Sql,
-    "x01_dedup_exact" -> x01Sql,
-    "x02_token_count" -> x02Sql,
-    "x03_quality_score" -> x03Sql,
-    "x04_lang_id" -> x04Sql,
-    "x05_fingerprint" -> x05Sql,
-    "x06_minhash_neardup" -> x06Sql,
-    "x07_simhash_neardup" -> x07Sql,
-    "x08_ngram_jaccard" -> x08Sql,
-    "x74_bm25" -> x74Sql,
-    "x75_shingle_novelty" -> x75Sql,
-    "x76_lang_mix" -> x76Sql,
-    "x77_char_classes" -> x77Sql,
-    "x78_vocab_growth" -> x78Sql,
-    "x79_collocations" -> x79Sql,
-    "x80_token_drift" -> x80Sql,
-    "x81_rate_limit" -> x81Sql,
-    "x82_char_entropy" -> x82Sql,
-    "x83_zipf_slope" -> x83Sql,
-    "x84_length_ks" -> x84Sql,
-    "x85_embedding_profile" -> x85Sql,
-    "x86_quality_dup_curve" -> x86Sql,
-    "x87_waterfill_report" -> x87Sql,
-    "x88_vocab_coverage" -> x88Sql,
-    "x152_linkage_weights" -> x152Sql,
-    "x153_entity_resolution" -> x153Sql,
-    "x154_cluster_sizes" -> x154Sql,
-    "x155_source_dup_matrix" -> x155Sql,
-    "x156_gate_ablation" -> x156Sql,
-    "x157_attribution" -> x157Sql,
-    "x158_column_profile" -> x158Sql,
-    "x159_source_containment" -> x159Sql,
-    "x160_heaps_fit" -> x160Sql,
-    "x161_effective_sample_size" -> x161Sql,
-    "x162_stickiness" -> x162Sql,
-    "x163_skipgram_pmi" -> x163Sql,
-    "x164_pareto_report" -> x164Sql,
-    "x165_effective_dim" -> x165Sql,
-    "x166_centroid_confusion" -> x166Sql,
-    "x167_transitions" -> x167Sql,
-    "x168_readability" -> x168Sql,
-    "x169_char_classes" -> x169Sql,
-    "x170_pr_curve" -> x170Sql,
-    "x171_boilerplate_ngrams" -> x171Sql,
-    "x172_lang_entropy" -> x172Sql,
-    "x173_burstiness" -> x173Sql,
-    "x174_ivm_rollup" -> x174Sql,
-    "x175_jaccard_histogram" -> x175Sql,
-    "x176_ab_test" -> x176Sql,
-    "x177_fold_stratification" -> x177Sql,
-    "x178_ship_delay" -> x178Sql,
-    "x179_seeded_sample" -> x179Sql,
-    "x180_fold_contamination" -> x180Sql,
-    "x181_packing_curve" -> x181Sql,
-    "x182_cluster_split" -> x182Sql,
-    "x183_retrieval_eval" -> x183Sql,
-    "x184_transition_entropy" -> x184Sql,
-    "x185_hapax_ratio" -> x185Sql,
-    "x186_conversion_survival" -> x186Sql,
-    "x187_reservoir_pq" -> x187Sql,
-    "x188_ivf_recall" -> x188Sql,
-    "x189_deflate_input" -> x189Sql,
-    "x196_minhash_oph" -> x196Sql,
-    "x195_wav_stats" -> x195Sql,
-    "x197_codec_contract" -> x197Sql,
-    "x198_oph_short_recall" -> x198Sql,
-    "x199_admission_twin" -> x199Sql,
-    "x200_image_neardup" -> x200Sql,
-    "x201_ann_serve_twin" -> x201Sql,
-    "x202_compaction_twin" -> x202Sql,
-    "x203_quantized_serve" -> x203Sql,
-    "x204_clip_neardup" -> x204Sql,
-    "x205_quantized_append_twin" -> x205Sql,
-    "x206_retrain_twin" -> x206Sql,
-    "x207_quantized_retrain_twin" -> x207Sql,
-    "x208_index_health" -> x208Sql,
-    "x209_quantized_health" -> x209Sql,
-    "x210_admission_health" -> x210Sql,
-    "x211_maintenance_plan" -> x211Sql,
-    "x212_admission_plan" -> x212Sql,
-    "x194_gif_frames" -> x194Sql,
-    "x193_pixel_resize" -> x193Sql,
-    "x192_manku_recall" -> x192Sql,
-    "x191_pixel_stats" -> x191Sql,
-    "x190_simhash_recall" -> x190Sql,
-    "x15_multimodal" -> x15Sql,
-    "x151_ucb_mixture" -> x151Sql,
-    "x150_snapshot_diff" -> x150Sql,
-    "x149_mutual_info" -> x149Sql,
-    "x148_benford" -> x148Sql,
-    "x147_silhouette" -> x147Sql,
-    "x146_perplexity_buckets" -> x146Sql,
-    "x145_wilson_reorder" -> x145Sql,
-    "x144_rfm_segments" -> x144Sql,
-    "x143_chi_square" -> x143Sql,
-    "x142_gopher_rules" -> x142Sql,
-    "x140_cohens_kappa" -> x140Sql,
-    "x139_pit_features" -> x139Sql,
-    "x138_linear_gapfill" -> x138Sql,
-    "x137_seasonal_anomalies" -> x137Sql,
-    "x136_contract_report" -> x136Sql,
-    "x135_k_anonymity" -> x135Sql,
-    "x134_quantile_map" -> x134Sql,
-    "x133_sequence_windows" -> x133Sql,
-    "x132_layout_audit" -> x132Sql,
-    "x131_compaction_plan" -> x131Sql,
-    "x130_tfidf_pairs" -> x130Sql,
-    "x129_gini_stump" -> x129Sql,
-    "x128_temperature_mix" -> x128Sql,
-    "x127_link_prediction" -> x127Sql,
-    "x126_weighted_median" -> x126Sql,
-    "x125_decayed_popularity" -> x125Sql,
-    "x124_hll_overlap" -> x124Sql,
-    "x123_attribution" -> x123Sql,
-    "x122_kcenter" -> x122Sql,
-    "x121_ols_trend" -> x121Sql,
-    "x120_window_dedup" -> x120Sql,
-    "x119_sorted_neighborhood" -> x119Sql,
-    "x118_bpe_encode" -> x118Sql,
-    "x117_priority_sample" -> x117Sql,
-    "x116_hybrid_rrf" -> x116Sql,
-    "x115_changepoint" -> x115Sql,
-    "x114_label_prop" -> x114Sql,
-    "x113_frequent_pairs" -> x113Sql,
-    "x112_triangle_census" -> x112Sql,
-    "x111_calibration" -> x111Sql,
-    "x110_rebalance_plan" -> x110Sql,
-    "x109_exactsubstr_strip" -> x109Sql,
-    "x108_eigenvector" -> x108Sql,
-    "x107_scd2_merge" -> x107Sql,
-    "x106_skew_report" -> x106Sql,
-    "x105_fk_profile" -> x105Sql,
-    "x104_bpe_merges" -> x104Sql,
-    "x103_covariance" -> x103Sql,
-    "x102_log_quantiles" -> x102Sql,
-    "x101_lsh_tuning" -> x101Sql,
-    "x100_score_auc" -> x100Sql,
-    "x99_hll_distinct" -> x99Sql,
-    "x98_kmeans" -> x98Sql,
-    "x97_tombstone_read" -> x97Sql,
-    "x96_cms_top_tokens" -> x96Sql,
-    "x95_semantic_dedup" -> x95Sql,
-    "x94_dsir_select" -> x94Sql,
-    "x93_bloom_decontaminate" -> x93Sql,
-    "x89_walk_authority" -> x89Sql,
-    "x90_containment" -> x90Sql,
-    "x91_weighted_jaccard" -> x91Sql,
-    "x92_sentences" -> x92Sql,
-    "x73_incremental_dedup" -> x73Sql,
-    "x70_training_order" -> x70Sql,
-    "x71_robust_outliers" -> x71Sql,
-    "x72_provenance" -> x72Sql,
-    "x67_classifier_score" -> x67Sql,
-    "x68_quantized_ann" -> x68Sql,
-    "x69_schema_evolution" -> x69Sql,
-    "x09_ann_bruteforce" -> x09Sql,
-    "x10_ann_ivf" -> x10Sql,
-    "x11_embedding_neardup" -> x11Sql,
-    "x12_events_window" -> x12Sql,
-    "x13_sessionize" -> x13Sql,
-    "x14_json_extract" -> x14Sql,
-    "x20_sliding_window" -> x20Sql,
-    "x23_pii_scrub" -> x23Sql,
-    "x24_repetition" -> x24Sql,
-    "x25_decontaminate" -> x25Sql,
-    "x26_token_budget_mix" -> x26Sql,
-    "x27_data_card" -> x27Sql,
-    "x28_neardup_clusters" -> x28Sql,
-    "x29_boilerplate" -> x29Sql,
-    "x30_sequence_packing" -> x30Sql)
+  val registry: Seq[Query] = Seq(
+    Query("x152_linkage_weights", x152LinkageWeights, Some(x152Sql)),
+    Query("x153_entity_resolution", x153EntityResolution, Some(x153Sql)),
+    Query("x154_cluster_sizes", x154ClusterSizes, Some(x154Sql)),
+    Query("x155_source_dup_matrix", x155SourceDupMatrix, Some(x155Sql)),
+    Query("x156_gate_ablation", x156GateAblation, Some(x156Sql)),
+    Query("x157_attribution", x157Attribution, Some(x157Sql)),
+    Query("x158_column_profile", x158ColumnProfile, Some(x158Sql)),
+    Query("x159_source_containment", x159SourceContainment, Some(x159Sql)),
+    Query("x160_heaps_fit", x160HeapsFit, Some(x160Sql)),
+    Query("x161_effective_sample_size", x161EffectiveSampleSize, Some(x161Sql)),
+    Query("x162_stickiness", x162Stickiness, Some(x162Sql)),
+    Query("x163_skipgram_pmi", x163SkipgramPmi, Some(x163Sql)),
+    Query("x164_pareto_report", x164ParetoReport, Some(x164Sql)),
+    Query("x165_effective_dim", x165EffectiveDim, Some(x165Sql)),
+    Query("x166_centroid_confusion", x166CentroidConfusion, Some(x166Sql)),
+    Query("x167_transitions", x167Transitions, Some(x167Sql)),
+    Query("x168_readability", x168Readability, Some(x168Sql)),
+    Query("x169_char_classes", x169CharClasses, Some(x169Sql)),
+    Query("x170_pr_curve", x170PrCurve, Some(x170Sql)),
+    Query("x171_boilerplate_ngrams", x171BoilerplateNgrams, Some(x171Sql)),
+    Query("x172_lang_entropy", x172LangEntropy, Some(x172Sql)),
+    Query("x173_burstiness", x173Burstiness, Some(x173Sql)),
+    Query("x174_ivm_rollup", x174IvmRollup, Some(x174Sql)),
+    Query("x175_jaccard_histogram", x175JaccardHistogram, Some(x175Sql)),
+    Query("x176_ab_test", x176AbTest, Some(x176Sql)),
+    Query("x177_fold_stratification", x177FoldStratification, Some(x177Sql)),
+    Query("x178_ship_delay", x178ShipDelay, Some(x178Sql)),
+    Query("x179_seeded_sample", x179SeededSample, Some(x179Sql)),
+    Query("x180_fold_contamination", x180FoldContamination, Some(x180Sql)),
+    Query("x181_packing_curve", x181PackingCurve, Some(x181Sql)),
+    Query("x182_cluster_split", x182ClusterSplit, Some(x182Sql)),
+    Query("x183_retrieval_eval", x183RetrievalEval, Some(x183Sql)),
+    Query("x184_transition_entropy", x184TransitionEntropy, Some(x184Sql)),
+    Query("x185_hapax_ratio", x185HapaxRatio, Some(x185Sql)),
+    Query("x186_conversion_survival", x186ConversionSurvival, Some(x186Sql)),
+    Query("x187_reservoir_pq", x187ReservoirPq, Some(x187Sql)),
+    Query("x188_ivf_recall", x188IvfRecall, Some(x188Sql)),
+    Query("x189_deflate_input", x189DeflateInput, Some(x189Sql)),
+    Query("x196_minhash_oph", x196MinhashOph, Some(x196Sql)),
+    Query("x195_wav_stats", x195WavStats, Some(x195Sql)),
+    Query("x197_codec_contract", x197CodecContract, Some(x197Sql)),
+    Query("x198_oph_short_recall", x198OphShortRecall, Some(x198Sql)),
+    Query("x199_admission_twin", x199AdmissionTwin, Some(x199Sql)),
+    Query("x200_image_neardup", x200ImageNeardup, Some(x200Sql)),
+    Query("x201_ann_serve_twin", x201AnnServeTwin, Some(x201Sql)),
+    Query("x202_compaction_twin", x202CompactionTwin, Some(x202Sql)),
+    Query("x203_quantized_serve", x203QuantizedServe, Some(x203Sql)),
+    Query("x204_clip_neardup", x204ClipNeardup, Some(x204Sql)),
+    Query("x205_quantized_append_twin", x205QuantizedAppendTwin, Some(x205Sql)),
+    Query("x206_retrain_twin", x206RetrainTwin, Some(x206Sql)),
+    Query("x207_quantized_retrain_twin", x207QuantizedRetrainTwin, Some(x207Sql)),
+    Query("x208_index_health", x208IndexHealth, Some(x208Sql)),
+    Query("x209_quantized_health", x209QuantizedHealth, Some(x209Sql)),
+    Query("x210_admission_health", x210AdmissionHealth, Some(x210Sql)),
+    Query("x211_maintenance_plan", x211MaintenancePlan, Some(x211Sql)),
+    Query("x212_admission_plan", x212AdmissionPlan, Some(x212Sql)),
+    Query("x194_gif_frames", x194GifFrames, Some(x194Sql)),
+    Query("x193_pixel_resize", x193PixelResize, Some(x193Sql)),
+    Query("x192_manku_recall", x192MankuRecall, Some(x192Sql)),
+    Query("x191_pixel_stats", x191PixelStats, Some(x191Sql)),
+    Query("x190_simhash_recall", x190SimhashRecall, Some(x190Sql)),
+    Query("x151_ucb_mixture", x151UcbMixture, Some(x151Sql)),
+    Query("x150_snapshot_diff", x150SnapshotDiff, Some(x150Sql)),
+    Query("x149_mutual_info", x149MutualInfo, Some(x149Sql)),
+    Query("x148_benford", x148Benford, Some(x148Sql)),
+    Query("x147_silhouette", x147Silhouette, Some(x147Sql)),
+    Query("x146_perplexity_buckets", x146PerplexityBuckets, Some(x146Sql)),
+    Query("x145_wilson_reorder", x145WilsonReorder, Some(x145Sql)),
+    Query("x144_rfm_segments", x144RfmSegments, Some(x144Sql)),
+    Query("x143_chi_square", x143ChiSquare, Some(x143Sql)),
+    Query("x142_gopher_rules", x142GopherRules, Some(x142Sql)),
+    // No oracle: no SQL engine exposes DEFLATE; MiningSpec replays the
+    // JVM Deflater row by row instead.
+    Query("x141_compression_ratio", x141CompressionRatio, None),
+    Query("x140_cohens_kappa", x140CohensKappa, Some(x140Sql)),
+    Query("x139_pit_features", x139PitFeatures, Some(x139Sql)),
+    Query("x138_linear_gapfill", x138LinearGapFill, Some(x138Sql)),
+    Query("x137_seasonal_anomalies", x137SeasonalAnomalies, Some(x137Sql)),
+    Query("x136_contract_report", x136ContractReport, Some(x136Sql)),
+    Query("x135_k_anonymity", x135KAnonymity, Some(x135Sql)),
+    Query("x134_quantile_map", x134QuantileMap, Some(x134Sql)),
+    Query("x133_sequence_windows", x133SequenceWindows, Some(x133Sql)),
+    Query("x132_layout_audit", x132LayoutAudit, Some(x132Sql)),
+    Query("x131_compaction_plan", x131CompactionPlan, Some(x131Sql)),
+    Query("x130_tfidf_pairs", x130TfIdfPairs, Some(x130Sql)),
+    Query("x129_gini_stump", x129GiniStump, Some(x129Sql)),
+    Query("x128_temperature_mix", x128TempMix, Some(x128Sql)),
+    Query("x127_link_prediction", x127LinkPrediction, Some(x127Sql)),
+    Query("x126_weighted_median", x126WeightedMedian, Some(x126Sql)),
+    Query("x125_decayed_popularity", x125DecayedPopularity, Some(x125Sql)),
+    Query("x124_hll_overlap", x124HllOverlap, Some(x124Sql)),
+    Query("x123_attribution", x123Attribution, Some(x123Sql)),
+    Query("x122_kcenter", x122KCenter, Some(x122Sql)),
+    Query("x121_ols_trend", x121OlsTrend, Some(x121Sql)),
+    Query("x120_window_dedup", x120WindowDedup, Some(x120Sql)),
+    Query("x119_sorted_neighborhood", x119SortedNeighborhood, Some(x119Sql)),
+    Query("x118_bpe_encode", x118BpeEncode, Some(x118Sql)),
+    Query("x117_priority_sample", x117PrioritySample, Some(x117Sql)),
+    Query("x116_hybrid_rrf", x116HybridRrf, Some(x116Sql)),
+    Query("x115_changepoint", x115Changepoint, Some(x115Sql)),
+    Query("x114_label_prop", x114LabelProp, Some(x114Sql)),
+    Query("x113_frequent_pairs", x113FrequentPairs, Some(x113Sql)),
+    Query("x112_triangle_census", x112CoPurchaseTriangles, Some(x112Sql)),
+    Query("x111_calibration", x111Calibration, Some(x111Sql)),
+    Query("x110_rebalance_plan", x110RebalancePlan, Some(x110Sql)),
+    Query("x109_exactsubstr_strip", x109ExactSubstrStrip, Some(x109Sql)),
+    Query("x108_eigenvector", x108Eigenvector, Some(x108Sql)),
+    Query("x107_scd2_merge", x107Scd2Merge, Some(x107Sql)),
+    Query("x106_skew_report", x106SkewReport, Some(x106Sql)),
+    Query("x105_fk_profile", x105FkProfile, Some(x105Sql)),
+    Query("x104_bpe_merges", x104BpeMerges, Some(x104Sql)),
+    Query("x103_covariance", x103Covariance, Some(x103Sql)),
+    Query("x102_log_quantiles", x102LogQuantiles, Some(x102Sql)),
+    Query("x101_lsh_tuning", x101LshTuning, Some(x101Sql)),
+    Query("x100_score_auc", x100ScoreAuc, Some(x100Sql)),
+    Query("x99_hll_distinct", x99HllUsers, Some(x99Sql)),
+    Query("x98_kmeans", x98Kmeans, Some(x98Sql)),
+    Query("x97_tombstone_read", x97TombstoneRead, Some(x97Sql)),
+    Query("x96_cms_top_tokens", x96CmsTopTokens, Some(x96Sql)),
+    Query("x95_semantic_dedup", x95SemanticDedup, Some(x95Sql)),
+    Query("x94_dsir_select", x94DsirSelect, Some(x94Sql)),
+    Query("x93_bloom_decontaminate", x93BloomDecontaminate, Some(x93Sql)),
+    Query("x89_walk_authority", x89WalkAuthority, Some(x89Sql)),
+    Query("x90_containment", x90Containment, Some(x90Sql)),
+    Query("x91_weighted_jaccard", x91WeightedJaccard, Some(x91Sql)),
+    Query("x92_sentences", x92Sentences, Some(x92Sql)),
+    Query("x87_waterfill_report", x87WaterfillReport, Some(x87Sql)),
+    Query("x88_vocab_coverage", x88VocabCoverage, Some(x88Sql)),
+    Query("x86_quality_dup_curve", x86QualityDupCurve, Some(x86Sql)),
+    Query("x85_embedding_profile", x85EmbeddingProfile, Some(x85Sql)),
+    Query("x82_char_entropy", x82CharEntropy, Some(x82Sql)),
+    Query("x83_zipf_slope", x83ZipfSlope, Some(x83Sql)),
+    Query("x84_length_ks", x84LengthKS, Some(x84Sql)),
+    Query("x79_collocations", x79Collocations, Some(x79Sql)),
+    Query("x80_token_drift", x80TokenDrift, Some(x80Sql)),
+    Query("x81_rate_limit", x81RateLimit, Some(x81Sql)),
+    Query("x75_shingle_novelty", x75ShingleNovelty, Some(x75Sql)),
+    Query("x76_lang_mix", x76LangMix, Some(x76Sql)),
+    Query("x77_char_classes", x77CharClasses, Some(x77Sql)),
+    Query("x78_vocab_growth", x78VocabGrowth, Some(x78Sql)),
+    Query("x74_bm25", x74Bm25, Some(x74Sql)),
+    Query("x73_incremental_dedup", x73IncrementalDedup, Some(x73Sql)),
+    Query("x70_training_order", x70TrainingOrder, Some(x70Sql)),
+    Query("x71_robust_outliers", x71RobustOutliers, Some(x71Sql)),
+    Query("x72_provenance", x72Provenance, Some(x72Sql)),
+    Query("x67_classifier_score", x67ClassifierScore, Some(x67Sql)),
+    Query("x68_quantized_ann", x68QuantizedAnn, Some(x68Sql)),
+    Query("x69_schema_evolution", x69SchemaEvolution, Some(x69Sql)),
+    Query("x66_dup_report", x66DupReport, Some(x66Sql)),
+    Query("x65_keep_best", x65KeepBest, Some(x65Sql)),
+    Query("x64_sliding_distinct", x64SlidingDistinct, Some(x64Sql)),
+    Query("x63_label_cohesion", x63LabelCohesion, Some(x63Sql)),
+    Query("x62_event_transitions", x62EventTransitions, Some(x62Sql)),
+    Query("x61_split_leakage", x61SplitLeakage, Some(x61Sql)),
+    Query("x60_rolling_window", x60RollingWindow, Some(x60Sql)),
+    Query("x58_gap_fill", x58GapFill, Some(x58Sql)),
+    Query("x59_snapshot_diff", x59SnapshotDiff, Some(x59Sql)),
+    Query("x56_dup_spans", x56DupSpans, Some(x56Sql)),
+    Query("x57_jsonl_roundtrip", x57JsonlRoundtrip, Some(x57Sql)),
+    Query("x54_interval_join_outer", x54IntervalJoinOuter, Some(x54Sql)),
+    Query("x55_orc_roundtrip", x55OrcRoundtrip, Some(x55Sql)),
+    Query("x51_keyword_search", x51KeywordSearch, Some(x51Sql)),
+    Query("x52_conversion_funnel", x52ConversionFunnel, Some(x52Sql)),
+    Query("x53_retention_cohorts", x53RetentionCohorts, Some(x53Sql)),
+    Query("x45_quality_gate", x45QualityGate, Some(x45Sql)),
+    Query("x46_blocklist", x46Blocklist, Some(x46Sql)),
+    Query("x47_incremental_stats", x47IncrementalStats, Some(x47Sql)),
+    Query("x48_salient_terms", x48SalientTerms, Some(x48Sql)),
+    Query("x49_event_enrich", x49EventEnrich, Some(x49Sql)),
+    Query("x50_length_deciles", x50LengthDeciles, Some(x50Sql)),
+    Query("x31_hash_split", x31HashSplit, Some(x31Sql)),
+    Query("x32_stratified_exact", x32StratifiedExact, Some(x32Sql)),
+    Query("x33_filter_funnel", x33FilterFunnel, Some(x33Sql)),
+    Query("x34_group_anomalies", x34GroupAnomalies, Some(x34Sql)),
+    Query("x35_ngram_topk", x35NgramTopK, Some(x35Sql)),
+    Query("x39_source_overlap", x39SourceOverlap, Some(x39Sql)),
+    Query("x40_centroid_outliers", x40CentroidOutliers, Some(x40Sql)),
+    Query("x41_bigram_lm", x41BigramLm, Some(x41Sql)),
+    Query("x42_interval_join", x42IntervalJoin, Some(x42Sql)),
+    Query("x43_doc_chunks", x43DocChunks, Some(x43Sql)),
+    Query("x44_zorder_codes", x44ZorderCodes, Some(x44Sql)),
+    Query("x30_sequence_packing", x30SequencePacking, Some(x30Sql)),
+    Query("x29_boilerplate", x29Boilerplate, Some(x29Sql)),
+    Query("x28_neardup_clusters", x28NearDupClusters, Some(x28Sql)),
+    Query("x15_multimodal", x15Multimodal, Some(x15Sql)),
+    Query("x17_per_source_cap", x17PerSourceCap, Some(x17Sql)),
+    Query("x18_curation", x18Curation, Some(x18Sql)),
+    Query("x01_dedup_exact", x01DedupExact, Some(x01Sql)),
+    Query("x02_token_count", x02TokenCount, Some(x02Sql)),
+    Query("x03_quality_score", x03QualityScore, Some(x03Sql)),
+    Query("x04_lang_id", x04LangId, Some(x04Sql)),
+    Query("x05_fingerprint", x05Fingerprint, Some(x05Sql)),
+    Query("x06_minhash_neardup", x06MinhashNearDup, Some(x06Sql)),
+    Query("x07_simhash_neardup", x07SimhashNearDup, Some(x07Sql)),
+    Query("x08_ngram_jaccard", x08NgramJaccard, Some(x08Sql)),
+    Query("x09_ann_bruteforce", x09AnnBruteForce, Some(x09Sql)),
+    Query("x10_ann_ivf", x10AnnIvf, Some(x10Sql)),
+    Query("x11_embedding_neardup", x11EmbeddingNearDup, Some(x11Sql)),
+    Query("x12_events_window", x12EventsWindow, Some(x12Sql)),
+    Query("x13_sessionize", x13Sessionize, Some(x13Sql)),
+    Query("x14_json_extract", x14JsonExtract, Some(x14Sql)),
+    Query("x20_sliding_window", x20SlidingWindow, Some(x20Sql)),
+    // No oracle: a seeded reservoir draw is engine-specific by nature;
+    // ReservoirSpec pins the 200-seed uniformity contract instead.
+    Query("x22_reservoir_sample", x22ReservoirSample, None),
+    Query("x23_pii_scrub", x23PiiScrub, Some(x23Sql)),
+    Query("x24_repetition", x24Repetition, Some(x24Sql)),
+    Query("x25_decontaminate", x25Decontaminate, Some(x25Sql)),
+    Query("x26_token_budget_mix", x26TokenBudgetMix, Some(x26Sql)),
+    Query("x27_data_card", x27DataCard, Some(x27Sql)))
 }

@@ -149,5 +149,9 @@ class CorpusGrowthSpec extends SparkSpec {
     assert(builds == 2) // tag1 built once, tag2 once
     assert(first eq again) // the SAME checkpointed frame, not an equal copy
     assert(first.collect().toSeq == other.collect().toSeq)
+    // another session, even one on the same SparkContext, builds its own
+    val fresh = SharedViews.materialized(spark.newSession(), "corpusgrowthspec/tag1")(build())
+    assert(builds == 3)
+    assert(!(fresh eq first))
   }
 }

@@ -35,4 +35,14 @@ class RegistrationGateSpec extends AnyFunSuite {
     // x141's Deflater replay as genuinely un-oraclable logic.
     assert(SparkEntry.rowsOnly.size <= 2)
   }
+
+  test("each query is registered once, and a repeated name fails the registry check") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.size == 246)
+    assert(names.distinct.size == 246)
+    assert(SparkEntry.unique(SparkEntry.registry) eq SparkEntry.registry)
+    val again = SparkEntry.registry(7).copy(oracle = None)
+    val e = intercept[IllegalArgumentException](SparkEntry.unique(SparkEntry.registry :+ again))
+    assert(e.getMessage.contains(again.name))
+  }
 }

@@ -52,7 +52,7 @@ class ShardingSpec extends SparkSpec {
   }
 
   test("consistent hashing moves far fewer rows than mod hashing on the real corpus") {
-    val rep = graft.queries.Extensions.queries("x110_rebalance_plan")(
+    val rep = SparkEntry.queries("x110_rebalance_plan")(
       spark, "/root/testdata/sf0.01")
       .collect().map(r => r.getString(0) -> r.getLong(3)).toMap
     assert(rep("ring") < rep("mod"))

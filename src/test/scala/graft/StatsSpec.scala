@@ -140,7 +140,7 @@ class StatsSpec extends SparkSpec {
   }
 
   test("x111 on the real corpus: partition of the joined rows, rates in range") {
-    val rows = graft.queries.Extensions.queries("x111_calibration")(
+    val rows = SparkEntry.queries("x111_calibration")(
       spark, "/root/testdata/sf0.01").collect()
     assert(rows.map(_.getLong(1)).sum == 500L)
     assert(rows.forall(r => r.getLong(0) >= 0L && r.getLong(0) <= 9L))

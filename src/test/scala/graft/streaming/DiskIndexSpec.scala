@@ -59,6 +59,21 @@ class DiskIndexSpec extends graft.SparkSpec {
       s"expected a scheme-naming failure, got: ${ex.getMessage}")
   }
 
+  test("the queries' temp directories are file:// URIs deleted when their FileSystem closes") {
+    val dirs = Seq("x199idx", "x199idx", "graft_x55_orc")
+      .map(graft.queries.Extensions.tempDir(spark, _))
+    assert(dirs.distinct.size == dirs.size)
+    dirs.foreach { d =>
+      assert(d.startsWith("file:///") && d == DiskIndex.qualifiedUri(spark, d), d)
+      val p = new org.apache.hadoop.fs.Path(d)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(fs.getFileStatus(p).isDirectory, d)
+      // true only if the directory was registered for deletion on close
+      assert(fs.cancelDeleteOnExit(p), s"$d is not deleted when its FileSystem closes")
+      fs.delete(p, true)
+    }
+  }
+
   test("qualified URIs unify path spellings and separate real locations") {
     val root = java.nio.file.Files.createTempDirectory("diskidx-uri").toString
     val viaFile = DiskIndex.qualifiedUri(spark, s"file:$root")
@@ -301,7 +316,7 @@ class DiskIndexSpec extends graft.SparkSpec {
     import spark.implicits._
     // every location in the cycle is the ://-spelled qualified URI — the
     // exact discipline the lake deployment and the oracled fixture twins
-    // (queries/Extensions.fixtureIndexDir) run under
+    // (queries/Extensions.tempDir) run under
     val root = DiskIndex.qualifiedUri(spark,
       java.nio.file.Files.createTempDirectory("cycle").toString)
     assert(root.startsWith("file:///"), s"qualified spelling: $root")
