@@ -60,48 +60,20 @@ object Bench {
     // query names to run exclusively; SPARK_GRAFT_REPEATS overrides the
     // best-of-2 protocol for variance hunting on an individual query
     // Timing protocol, used by the main pass, the hot-set extras, and the
-    // quiet-tail re-time alike. DEFAULT (honest, per-run): every repeat
-    // re-invokes fn() and times construction + Catalyst planning +
-    // execution — NOTHING a query does escapes the clock, including eager
-    // driver-side work in constructors (hot-shingle collects, planted-
-    // media checkpoints). SPARK_GRAFT_SHARED_PLAN=1 switches to the
-    // plan-cached variant the r15 verdict floated ("shared-plan warm-up /
-    // Bench-side job reuse"): build once, time collect() on the SAME
-    // Dataset per repeat — Dataset actions reuse their own QueryExecution,
-    // so run 2 executes the already-compiled plan, the steady-state a
-    // thrift-server/repeated-ETL deployment lives in. The shared mode is
-    // an OPT-IN receipt, not the default, because it has a documented
-    // loophole: any eager work inside fn() (and anything a query
-    // localCheckpoints internally) happens once OUTSIDE the clock, so
-    // queries with eager constructors under-report (first observed on
-    // x204: 3.6 s honest vs 0.04 s shared — the planted-GIF decode lives
-    // in a checkpoint the reused Dataset never re-runs). Failed runs are
+    // quiet-tail re-time alike: every repeat re-invokes fn() and times
+    // construction + Catalyst planning + execution — NOTHING a query does
+    // escapes the clock, including eager driver-side work in constructors
+    // (hot-shingle collects, planted-media checkpoints). Failed runs are
     // excluded from the min (a query that fails fast must not
     // under-report); a build failure yields no runs → the -1.0 sentinel.
-    val sharedPlan = sys.env.getOrElse("SPARK_GRAFT_SHARED_PLAN", "0") == "1"
     def timedRuns(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        n: Int): Seq[Double] = {
-      def build(): Option[org.apache.spark.sql.DataFrame] =
-        try Some(fn(spark, sfDir).selectExpr("count(*)"))
-        catch { case _: Throwable => None }
-      if (sharedPlan) {
-        build().toSeq.flatMap { df =>
-          (1 to n).flatMap { _ =>
-            val t0 = System.nanoTime()
-            val ok = try { df.collect(); true }
-                     catch { case _: Throwable => false }
-            if (ok) Some((System.nanoTime() - t0) / 1e9) else None
-          }
-        }
-      } else {
-        (1 to n).flatMap { _ =>
-          val t0 = System.nanoTime()
-          val ok = try { build().exists { df => df.collect(); true } }
-                   catch { case _: Throwable => false }
-          if (ok) Some((System.nanoTime() - t0) / 1e9) else None
-        }
+        n: Int): Seq[Double] =
+      (1 to n).flatMap { _ =>
+        val t0 = System.nanoTime()
+        val ok = try { fn(spark, sfDir).selectExpr("count(*)").collect(); true }
+                 catch { case _: Throwable => false }
+        if (ok) Some((System.nanoTime() - t0) / 1e9) else None
       }
-    }
     val only = args.toSet
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty,

@@ -127,7 +127,10 @@ object Pipeline {
     val usage = "usage: Pipeline <bronze-to-silver|silver-to-gold|full> <base> <ingestDate>"
     require(args.length == 3, usage)
     val spark = Session.local()
-    val pipe = new Pipeline(spark, args(1), args(2))
+    // `base` goes through the reference's storage env contract: unchanged
+    // when no PIPELINE_STORAGE_MODE/ADLS_* variable is set
+    Lake.applyStorageAuth(spark, sys.env)
+    val pipe = new Pipeline(spark, Lake.resolveBaseFromEnv(sys.env, args(1)), args(2))
     val json = args(0) match {
       case "bronze-to-silver" => pipe.runBronzeToSilver()
       case "silver-to-gold"   => pipe.runSilverToGold()

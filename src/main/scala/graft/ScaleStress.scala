@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale/saturation stress for the three near-dup kernels (r12 verdict ask
@@ -33,6 +33,55 @@ object ScaleStress {
   private val Names = Seq("x06_minhash_neardup", "x07_simhash_neardup",
     "x08_ngram_jaccard", "x196_minhash_oph")
 
+  /** `n` replicas of `base` in one frame. Replica k shifts `idCol` by
+    * k·(max(id)+1) — max+1, NOT count(): on a gapped or non-0-based id
+    * space, count-based offsets would silently collide replica ranges and
+    * build the replicated indexes over duplicate ids — and takes its other
+    * columns from `rest(k)` (a per-replica suffix or perturbation). One
+    * replica is `base` itself. */
+  def replicated(base: DataFrame, idCol: String, n: Int)(rest: Int => Seq[Column]): DataFrame =
+    if (n <= 1) base
+    else {
+      val stride = idStride(base, idCol)
+      (0 until n).map { k =>
+        base.select((col(idCol) + lit(k * stride)).as(idCol) +: rest(k): _*)
+      }.reduce(_ unionAll _)
+    }
+
+  /** max(id)+1: the id offset between two replicas of `df`. */
+  def idStride(df: DataFrame, idCol: String): Long =
+    df.agg(max(col(idCol)).cast("long")).head().getLong(0) + 1
+
+  /** Document replica k: the text plus a per-replica suffix token, so each
+    * replica is a J≈0.99 near-dup of its base document. */
+  def suffixed(k: Int): Seq[Column] = Seq(concat(col("text"), lit(s" rep$k")).as("text"))
+
+  /** Vector replica k: every component shifted by a NONZERO (k+1)·0.001,
+    * so a truth ranking is decided by geometry, never by id tie-breaks. */
+  def perturbed(k: Int): Seq[Column] =
+    Seq(transform(col("embedding"), x => x + lit((k + 1) * 0.001f)).as("embedding"))
+
+  /** `df` as ONE parquet file at `file` (not a Spark part-dir), the layout
+    * DuckDB's read_parquet sees in the generated testdata. The Spark write
+    * stages in `<file>_tmp`, which is removed once its part file is copied. */
+  def writeSingleParquet(df: DataFrame, file: String): Unit = {
+    val staging = new java.io.File(s"${file}_tmp")
+    df.coalesce(1).write.mode("overwrite").parquet(staging.getPath)
+    val part = staging.listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .getOrElse(sys.error("no part file written"))
+    new java.io.File(file).getAbsoluteFile.getParentFile.mkdirs()
+    java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(file),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    staging.listFiles().foreach(f => java.nio.file.Files.deleteIfExists(f.toPath))
+    java.nio.file.Files.deleteIfExists(staging.toPath)
+  }
+
+  /** [[Verify.writeLayout]] for a pair dump of `names` with their oracles,
+    * so `tools/selfcheck.py` replays the same DuckDB oracles at scale. */
+  def writeLayout(dir: String, names: Seq[String]): Unit =
+    Verify.writeLayout(dir, names, names.map(n => n -> SparkEntry.oracleSql(n)))
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "target/stress"
@@ -57,7 +106,16 @@ object ScaleStress {
     import spark.implicits._
     val base = Tables.load(spark, sfDir, "documents")
       .select($"doc_id".cast("long").as("doc_id"), $"text")
-    val nBase = base.agg(max($"doc_id")).as[Long].collect()(0) + 1
+    val nBase = idStride(base, "doc_id")
+    def embeddings = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    // every `step`-th vector as a checkpointed batch of serve queries (the
+    // batch serve twins take an event-time column; one fixed stamp)
+    def servedQueries(vecs: DataFrame, step: Int): DataFrame =
+      vecs.filter($"vec_id" % step === 0)
+        .select($"vec_id",
+          lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts"),
+          $"embedding")
+        .localCheckpoint()
     def timed(body: => Long): (Double, Long) = {
       val t0 = System.nanoTime(); val n = body
       ((System.nanoTime() - t0) / 1e9, n)
@@ -81,24 +139,8 @@ object ScaleStress {
     // rows — built only when a pair leg actually reads it (single-leg
     // iteration on ann/annskew/ophlong must not pay the corpus write)
     if (ranNames.nonEmpty) {
-    new java.io.File(s"$outDir/sf1/").mkdirs()
-    val big = (0 until 10).map { k =>
-      base.select(($"doc_id" + lit(k * nBase)).as("doc_id"),
-        concat($"text", lit(s" rep$k")).as("text"))
-    }.reduce(_ unionAll _)
-    // single FILE (not a Spark part-dir) so DuckDB's read_parquet sees the
-    // same layout as the driver-generated testdata
-    big.coalesce(1).write.mode("overwrite").parquet(s"$outDir/sf1_tmp")
-    val part = new java.io.File(s"$outDir/sf1_tmp").listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .getOrElse(sys.error("no part file written"))
-    java.nio.file.Files.copy(part.toPath,
-      java.nio.file.Paths.get(s"$outDir/sf1/documents.parquet"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // the staging dir served its one copy (same cleanup as the lsh40x leg)
-    new java.io.File(s"$outDir/sf1_tmp").listFiles()
-      .foreach(f => java.nio.file.Files.deleteIfExists(f.toPath))
-    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$outDir/sf1_tmp"))
+    writeSingleParquet(replicated(base, "doc_id", 10)(suffixed),
+      s"$outDir/sf1/documents.parquet")
     val corpus = spark.read.parquet(s"$outDir/sf1/documents.parquet")
     corpus.count() // warm
     (1 to 40).foreach(_ => spark.range(1).count())
@@ -106,7 +148,7 @@ object ScaleStress {
     // the same outDir: overwriting manifest/oracle_sql with the subset
     // would silently downgrade the still-present other pair dirs to
     // rows-only in selfcheck. Refuse loudly; fresh outDir per subset run.
-    val manifestPath = java.nio.file.Paths.get(s"$outDir/verify/manifest.json")
+    val manifestPath = java.nio.file.Paths.get(s"$outDir/verify", Verify.Manifest)
     if (only.nonEmpty && java.nio.file.Files.exists(manifestPath)) {
       val prior = java.nio.file.Files.readString(manifestPath)
       val missing = Names.filterNot(ranNames.contains).filter(prior.contains)
@@ -124,17 +166,7 @@ object ScaleStress {
       results(s"${name}_10x") = sec
       results(s"${name}_10x_pairs") = n.toDouble
     }
-    // Verify-layout sidecars so tools/selfcheck.py replays the oracles
-    def jq(s: String): String = Jsons.quote(s)
-    new java.io.File(s"$outDir/verify").mkdirs()
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/verify/oracle_sql.json"),
-      ranNames.map(n => s"${jq(n)}: ${jq(SparkEntry.oracleSql(n))}")
-        .mkString("{", ",", "}"))
-    java.nio.file.Files.writeString(manifestPath,
-      ranNames.map(jq).mkString("[", ",", "]"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/verify/errors.json"), "{}")
+    writeLayout(s"$outDir/verify", ranNames)
     }
     // ---- leg 1b: ANN at 10× — 20k vectors, brute-force truth, IVF recall
     // sweep (the x188 discipline at stress scale). Replicas are perturbed
@@ -142,14 +174,7 @@ object ScaleStress {
     // floor asserts the probed-cell search still finds the neighborhood
     // when cells are 10× fuller.
     if (wanted("ann")) {
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val nEmb = emb.agg(max($"vec_id")).as[Long].collect()(0) + 1
-      // every replica gets a NONZERO perturbation ((k+1)·0.001) so the
-      // truth ranking is decided by geometry, never by id tie-breaks
-      val emb10 = (0 until 10).map { k =>
-        emb.select(($"vec_id" + lit(k * nEmb)).as("vec_id"),
-          transform($"embedding", x => x + lit((k + 1) * 0.001f)).as("embedding"))
-      }.reduce(_ unionAll _).localCheckpoint()
+      val emb10 = replicated(embeddings, "vec_id", 10)(perturbed).localCheckpoint()
       val annQueries = emb10.filter($"vec_id" % 199 === 0).localCheckpoint()
       var truth: DataFrame = null
       val (tTruth, nTruth) = timed {
@@ -193,14 +218,10 @@ object ScaleStress {
     // sample over-represents the hot direction, and hot queries' truth
     // lives inside the hot cell they probe first.
     if (wanted("annskew")) {
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val nEmb = emb.agg(max($"vec_id")).as[Long].collect()(0) + 1
+      val emb = embeddings
       val hot = emb.filter($"vec_id" === 0)
         .select($"embedding").as[Array[Float]].collect()(0).toSeq
-      val emb10 = (0 until 10).map { k =>
-        emb.select(($"vec_id" + lit(k * nEmb)).as("vec_id"),
-          transform($"embedding", x => x + lit((k + 1) * 0.001f)).as("embedding"))
-      }.reduce(_ unionAll _)
+      val emb10 = replicated(emb, "vec_id", 10)(perturbed)
       val skewed = emb10.select($"vec_id",
         when($"vec_id" % 2 === 0,
           transform(typedLit(hot), x => x + $"vec_id".cast("float") * lit(1e-6f)))
@@ -327,10 +348,7 @@ object ScaleStress {
       import graft.functions.Exprs
       val ratios = scala.collection.mutable.LinkedHashMap.empty[Int, Double]
       Seq(10, 20, 40).foreach { r =>
-        val corpus = (0 until r).map { k =>
-          base.select(($"doc_id" + lit(k * nBase)).as("doc_id"),
-            concat($"text", lit(s" rep$k")).as("text"))
-        }.reduce(_ unionAll _).localCheckpoint()
+        val corpus = replicated(base, "doc_id", r)(suffixed).localCheckpoint()
         // candidate volume of the SAME kernel x06 runs (128 hashes, 64
         // bands, cap 1000), counted before the verify join
         val bandedSig = corpus.select($"doc_id",
@@ -355,30 +373,10 @@ object ScaleStress {
         ratios(r) = nCand.toDouble / math.max(1L, nPairs)
         if (r == 40) {
           // verify-layout dump for the DuckDB exact-pair replay at 200k docs
-          new java.io.File(s"$outDir/sf40").mkdirs()
-          corpus.coalesce(1).write.mode("overwrite").parquet(s"$outDir/sf40_tmp")
-          val part40 = new java.io.File(s"$outDir/sf40_tmp").listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error("no part file written"))
-          java.nio.file.Files.copy(part40.toPath,
-            java.nio.file.Paths.get(s"$outDir/sf40/documents.parquet"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          writeSingleParquet(corpus, s"$outDir/sf40/documents.parquet")
           pairs.orderBy($"doc_a", $"doc_b").coalesce(1)
             .write.mode("overwrite").parquet(s"$outDir/verify40/x06_minhash_neardup")
-          def jq(s: String): String = Jsons.quote(s)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$outDir/verify40/oracle_sql.json"),
-            s"""{${jq("x06_minhash_neardup")}: ${jq(SparkEntry.oracleSql("x06_minhash_neardup"))}}""")
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$outDir/verify40/manifest.json"),
-            s"""[${jq("x06_minhash_neardup")}]""")
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$outDir/verify40/errors.json"), "{}")
-          // the single-file staging dir served its one copy
-          new java.io.File(s"$outDir/sf40_tmp").listFiles()
-            .foreach(f => java.nio.file.Files.deleteIfExists(f.toPath))
-          java.nio.file.Files.deleteIfExists(
-            java.nio.file.Paths.get(s"$outDir/sf40_tmp"))
+          writeLayout(s"$outDir/verify40", Seq("x06_minhash_neardup"))
         }
         // each round's checkpointed pair set would otherwise stay pinned in
         // block-manager storage for the rest of the run — wasted executor
@@ -403,17 +401,8 @@ object ScaleStress {
     // float index, and the storage cut, at stress scale.
     if (wanted("pq")) {
       import graft.streaming.AnnStreams
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val nEmb = emb.agg(max($"vec_id")).as[Long].collect()(0) + 1
-      val emb10 = (0 until 10).map { k =>
-        emb.select(($"vec_id" + lit(k * nEmb)).as("vec_id"),
-          transform($"embedding", x => x + lit((k + 1) * 0.001f)).as("embedding"))
-      }.reduce(_ unionAll _).localCheckpoint()
-      val queries = emb10.filter($"vec_id" % 199 === 0)
-        .select($"vec_id",
-          lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts"),
-          $"embedding")
-        .localCheckpoint()
+      val emb10 = replicated(embeddings, "vec_id", 10)(perturbed).localCheckpoint()
+      val queries = servedQueries(emb10, 199)
       val nQ = queries.count()
       val truth = graft.ops.Similarity
         .bruteForceTopK(emb10, queries.select($"vec_id", $"embedding"),
@@ -484,10 +473,7 @@ object ScaleStress {
     if (wanted("reindex")) {
       import graft.streaming.DedupStreams
       val dir = s"$outDir/reindex"
-      val big = (0 until 10).map { k =>
-        base.select(($"doc_id" + lit(k * nBase)).as("doc_id"),
-          concat($"text", lit(s" rep$k")).as("text"))
-      }.reduce(_ unionAll _).localCheckpoint()
+      val big = replicated(base, "doc_id", 10)(suffixed).localCheckpoint()
       val nBig = big.count()
       val (buildSec, _) = timed {
         DedupStreams.buildAdmissionIndex(big, "doc_id", "text", s"$dir/idx")
@@ -564,12 +550,8 @@ object ScaleStress {
     // costs next to the original build.
     if (wanted("retrain")) {
       import graft.streaming.AnnStreams
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val nEmb = emb.agg(max($"vec_id")).as[Long].collect()(0) + 1
-      val emb10 = (0 until 10).map { k =>
-        emb.select(($"vec_id" + lit(k * nEmb)).as("vec_id"),
-          transform($"embedding", x => x + lit((k + 1) * 0.001f)).as("embedding"))
-      }.reduce(_ unionAll _).localCheckpoint()
+      val nEmb = idStride(embeddings, "vec_id")
+      val emb10 = replicated(embeddings, "vec_id", 10)(perturbed).localCheckpoint()
       val n10 = emb10.count()
       // the drifted population: 20 TIGHT clusters around dimension-REVERSED
       // anchors. Reversal pushes the anchors off every trained centroid
@@ -602,11 +584,7 @@ object ScaleStress {
         "vec_id", "embedding", batchId = 0L)
       // reopen AFTER the landing: handles bind the tail at open time
       val old = AnnStreams.openServingIndex(spark, s"$dir/blue")
-      val queries = drift.filter($"vec_id" % 19 === 0)
-        .select($"vec_id",
-          lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts"),
-          $"embedding")
-        .localCheckpoint()
+      val queries = servedQueries(drift, 19)
       val nQ = queries.count()
       val combined = emb10.unionAll(drift).localCheckpoint()
       val truth = graft.ops.Similarity
@@ -720,12 +698,7 @@ object ScaleStress {
       import graft.streaming.AnnStreams
       import org.apache.spark.sql.execution.FileSourceScanExec
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val nEmb = emb.agg(max($"vec_id")).as[Long].collect()(0) + 1
-      val emb10 = (0 until 10).map { k =>
-        emb.select(($"vec_id" + lit(k * nEmb)).as("vec_id"),
-          transform($"embedding", x => x + lit((k + 1) * 0.001f)).as("embedding"))
-      }.reduce(_ unionAll _).localCheckpoint()
+      val emb10 = replicated(embeddings, "vec_id", 10)(perturbed).localCheckpoint()
       val dir = s"$outDir/nobc"
       val fBuilt = AnnStreams.buildServingIndex(emb10, "vec_id", "embedding",
         s"$dir/f", nlist = 64)
@@ -734,17 +707,13 @@ object ScaleStress {
       // a live tail: the appends branch must keep its contract under the
       // same disable (it joins unbucketed — small-fraction by design)
       val tail = emb10.filter($"vec_id" % 20 === 3)
-        .select(($"vec_id" + lit(10 * nEmb)).as("vec_id"), $"embedding")
+        .select(($"vec_id" + lit(idStride(emb10, "vec_id"))).as("vec_id"), $"embedding")
       AnnStreams.landAppendBatch(tail, fBuilt, "vec_id", "embedding", batchId = 0L)
       AnnStreams.landQuantizedAppendBatch(tail, qBuilt, "vec_id", "embedding",
         batchId = 0L)
       val float = AnnStreams.openServingIndex(spark, s"$dir/f")
       val quant = AnnStreams.openQuantizedIndex(spark, s"$dir/q")
-      val queries = emb10.filter($"vec_id" % 7 === 0)
-        .select($"vec_id",
-          lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts"),
-          $"embedding")
-        .localCheckpoint()
+      val queries = servedQueries(emb10, 7)
       val nQ = queries.count()
       def serveF() = AnnStreams.annServeBatch(queries, float,
         "vec_id", "ts", "embedding", k = 10, nprobe = 4)

@@ -91,7 +91,11 @@ class Serve(runPipeline: () => String) {
 object Serve {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: Serve <port> <base> <ingestDate>")
-    val pipe = new Pipeline(Session.local(), args(1), args(2))
+    val spark = Session.local()
+    // `base` resolves as in Pipeline.main (the storage env contract)
+    graft.io.Lake.applyStorageAuth(spark, sys.env)
+    val pipe = new Pipeline(spark,
+      graft.io.Lake.resolveBaseFromEnv(sys.env, args(1)), args(2))
     val port = new Serve(() => pipe.runBronzeToSilverAndGold()).start(args(0).toInt)
     println(s"""{"serving": $port}""")
     Thread.currentThread.join()

@@ -129,75 +129,78 @@ object StreamBench {
     val corpus = spark.read.parquet(s"$corpusDir/documents.parquet")
       .selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "text")
     lazy val nCorpus = corpus.count()
-    // replica id offset = max(id)+1, NOT count() (the ScaleStress
-    // convention): on a gapped or non-0-based id space, count-based
-    // offsets would silently collide replica ranges and build the 10x
-    // indexes over duplicate ids
-    lazy val corpusStride = corpus.agg(max(col("doc_id"))).head().getLong(0) + 1
+    lazy val annCorpus = spark.read.parquet(s"$corpusDir/embeddings.parquet")
+      .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
     // ONE parameterized synthetic-workload generator per modality (vectors,
     // texts) — the legs vary only vocab/seed, so the dimension/shape can
     // never silently diverge between serve and append sides
     def synthVecSeeded(seed: Int) = expr(s"transform(sequence(0, 63), " +
       s"i -> cast(pmod(hash(value * $seed + i), 1000) as float) / 500.0 - 1.0)")
-    val synthVec = synthVecSeeded(131)
     def synthTextSeeded(vocab: String, seed: Int) =
       expr(s"concat_ws(' ', transform(sequence(0, 29), " +
         s"i -> concat('$vocab', pmod(hash(value * $seed + i), 5000))))")
-    def buildIndex(name: String, c: DataFrame): (graft.streaming.DedupStreams.AdmissionIndex, Double) = {
+    def timed[A](body: => A): (A, Double) = {
       val t0 = System.nanoTime()
-      val idx = graft.streaming.DedupStreams.buildAdmissionIndex(
-        c, "doc_id", "text", s"$outRoot/$name")
-      (idx, (System.nanoTime() - t0) / 1e9)
+      val a = body
+      (a, (System.nanoTime() - t0) / 1e9)
     }
-    def admissionLeg(name: String, idxName: String, replicas: Int): Seq[String] =
+    // one `"<leg>_<key>":<value>` receipt field: seconds to 0.1 s,
+    // strings quoted, counts verbatim
+    def field(leg: String, kv: (String, Any)): String = kv match {
+      case (k, s: Double) => s""""${leg}_$k":${"%.1f".format(s)}"""
+      case (k, s: String) => s""""${leg}_$k":"$s""""
+      case (k, v) => s""""${leg}_$k":$v"""
+    }
+    // Appends run through the REAL appendStream/appendToIndex sinks on a
+    // 2 s maintenance trigger
+    val maintTrigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("2 seconds")
+    // A SERVING FAMILY is everything the legs below need to know about one
+    // index kind — float IVF, int8-quantized IVF, or the near-dup admission
+    // index — so each leg is written once and driven per family, and two
+    // families' receipts differ only in what the family itself costs, not
+    // in loop structure. The members are what really differs: the corpus
+    // and how `replicas` copies of it are indexed, how a rate row becomes
+    // an arrival (a query vector or a text), the serve path (stream and its
+    // batch twin), the streaming appender, the tail and row counters, the
+    // blue/green compaction, how a planted tail lands, the maintenance
+    // policy with its act name ("retrain" or "reindex") and act deadline,
+    // and the family's extra policy-leg receipt keys (from the build
+    // seconds and the green index).
+    final case class ServingFamily[I](
+        corpus: DataFrame,
+        build: (Int, String) => I,
+        open: String => I,
+        arrivals: DataFrame => DataFrame,
+        serveStream: (DataFrame, I) => DataFrame,
+        serveBatch: (DataFrame, I) => DataFrame,
+        appendStream: (I, String) => org.apache.spark.sql.streaming.StreamingQuery,
+        tailRows: I => Long,
+        rows: I => Long,
+        compact: (String, String) => I,
+        landDrift: (DataFrame, I) => Seq[(String, Any)],
+        policy: graft.streaming.Maintenance.Family,
+        act: String,
+        actDeadlineS: Long,
+        policyKeys: (Double, I) => Seq[(String, Any)])
+    def serve[I](key: String, fam: ServingFamily[I], idx: I): String =
+      measure(key, rate => fam.serveStream(fam.arrivals(rate), idx),
+        "append", rowsPerBatch = admRowsPerBatch)
+    // JIT/codegen warm-up through the batch twin (identical plan) so the
+    // first measured phase doesn't pay first-query compilation that later
+    // phases then don't — phase deltas must be index state, not warmup
+    def warm[I](fam: ServingFamily[I], idx: I): Unit =
+      fam.serveBatch(fam.arrivals(spark.range(5000).select(col("id").as("value"),
+        lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("timestamp"))),
+        idx).count()
+    // serve-only legs: index `replicas` copies of the family corpus once
+    // (the build is timed), then serve the synthesized arrivals — the
+    // measured cost is the whole per-arrival path (map-side probe +
+    // stream-static join + aggregation). The r14 verdict asked for the
+    // admission leg at the 10× corpus (50k docs).
+    def serveLeg[I](name: String, fam: ServingFamily[I], replicas: Int): Seq[String] =
       if (!wanted(name)) Seq.empty else {
-        // replicated corpus: per-replica suffix token, the ScaleStress
-        // construction — the r14 verdict asked for the admission leg at the
-        // 10× corpus (50k docs)
-        val c = if (replicas <= 1) corpus else (0 until replicas).map { k =>
-          corpus.select((col("doc_id") + lit(k * corpusStride)).as("doc_id"),
-            concat(col("text"), lit(s" rep$k")).as("text"))
-        }.reduce(_ unionAll _)
-        val (idx, idxSec) = buildIndex(idxName, c)
-        Seq(
-          measure(name,
-            rate => graft.streaming.DedupStreams.nearDupAdmission(
-              rate.select(col("value").as("doc_id"), col("timestamp").as("ts"),
-                synthTextSeeded("w", 31).as("text")),
-              idx, "doc_id", "ts", "text", watermarkDelay = "10 seconds"),
-            "append", rowsPerBatch = admRowsPerBatch),
-          s""""${name}_index_build_s":${"%.1f".format(idxSec)}""")
-      }
-    // ANN serving: index the sf embeddings table once (trained quantizer,
-    // the production mode), serve synthesized dim-64 query vectors — the
-    // measured cost is the map-side probe + stream-static cell join +
-    // top-k aggregation, the whole per-arrival path
-    def annServeLeg(name: String, replicas: Int): Seq[String] =
-      if (!wanted(name)) Seq.empty else {
-        val e = spark.read.parquet(s"$corpusDir/embeddings.parquet")
-          .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
-        val stride = e.agg(max(col("vec_id"))).head().getLong(0) + 1
-        val c = if (replicas <= 1) e else (0 until replicas).map { k =>
-          e.select((col("vec_id") + lit(k * stride)).as("vec_id"), col("embedding"))
-        }.reduce(_ unionAll _)
-        // nlist scales ~sqrt(N), the standard IVF sizing: candidates per
-        // query (nprobe·N/nlist) then grow ~sqrt(corpus) instead of
-        // linearly — a fixed nlist at 10× the corpus probed 10× the
-        // vectors per query and paid ~3× throughput for it (measured)
-        val nlist = math.max(1, (64 * math.sqrt(replicas.toDouble)).round.toInt)
-        val t0 = System.nanoTime()
-        val idx = graft.streaming.AnnStreams.buildServingIndex(
-          c, "vec_id", "embedding", s"$outRoot/$name-idx", nlist = nlist)
-        val idxSec = (System.nanoTime() - t0) / 1e9
-        Seq(
-          measure(name,
-            rate => graft.streaming.AnnStreams.annServe(
-              rate.select(col("value").as("query_id"), col("timestamp").as("ts"),
-                synthVec.as("embedding")),
-              idx, "query_id", "ts", "embedding", k = 10, nprobe = 4,
-              watermarkDelay = "10 seconds"),
-            "append", rowsPerBatch = admRowsPerBatch),
-          s""""${name}_index_build_s":${"%.1f".format(idxSec)}""")
+        val (idx, idxSec) = timed(fam.build(replicas, s"$outRoot/$name-idx"))
+        Seq(serve(name, fam, idx), field(name, "index_build_s" -> idxSec))
       }
     // ---- maintenance-under-load legs (r15 verdict ask #2): serve WHILE the
     // index-maintenance stream appends concurrently, for three tail states:
@@ -206,135 +209,41 @@ object StreamBench {
     //   *_grown_tail   — handle REOPENED after ~10-20% of the corpus landed
     //                    (measures the unbucketed-tail join cost)
     //   *_post_compact — after blue/green compaction (the recovery number)
-    // Appends run through the REAL appendStream/appendToIndex sinks on a
-    // 2 s maintenance trigger; phases A+B keep them live for 2×runSeconds
-    // (≥90 s at the 45 s default). Tail row counts land in the JSON so the
-    // throughput deltas are attributable.
-    val maintTrigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("2 seconds")
-    def annMaintLeg(name: String): Seq[String] =
+    // Phases A+B keep the appender live for 2×runSeconds (≥90 s at the
+    // 45 s default). Tail row counts land in the JSON so the throughput
+    // deltas are attributable.
+    def maintLeg[I](name: String, fam: ServingFamily[I]): Seq[String] =
       if (!wanted(name)) Seq.empty else {
-        import graft.streaming.AnnStreams
-        val e = spark.read.parquet(s"$corpusDir/embeddings.parquet")
-          .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
-        val stride = e.agg(max(col("vec_id"))).head().getLong(0) + 1
         val idxDir = s"$outRoot/$name-idx"
-        val t0 = System.nanoTime()
-        val built = AnnStreams.buildServingIndex(e, "vec_id", "embedding", idxDir, nlist = 64)
-        val idxSec = (System.nanoTime() - t0) / 1e9
-        def serveLeg(phase: String, idx: AnnStreams.ServingIndex): String =
-          measure(s"${name}_$phase",
-            rate => AnnStreams.annServe(
-              rate.select(col("value").as("query_id"), col("timestamp").as("ts"),
-                synthVec.as("embedding")),
-              idx, "query_id", "ts", "embedding", k = 10, nprobe = 4,
-              watermarkDelay = "10 seconds"),
-            "append", rowsPerBatch = admRowsPerBatch)
-        // JIT/codegen warm-up through the batch twin (identical plan) so
-        // phase A doesn't pay first-query compilation that phases B/C
-        // then don't — the A→B→C deltas must be tail-state, not warmup
-        AnnStreams.annServeBatch(
-          spark.range(5000).select(col("id").as("value"))
-            .select(col("value").as("query_id"),
-              lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts"),
-              synthVec.as("embedding")),
-          built, "query_id", "ts", "embedding", k = 10, nprobe = 4).count()
-        // ~10 vec/s on a 2 s trigger: ~450 vectors over phases A+B at the
-        // 45 s default — a 20%-of-corpus tail in a handful of batch dirs
+        val (built, idxSec) = timed(fam.build(1, idxDir))
+        warm(fam, built)
         // one DISCARDED streaming phase: the serve stream's own ramp (state
         // store, scheduler, codegen glue) must not masquerade as phase-A
         // cost — the A/B/C deltas are meant to isolate TAIL STATE
-        serveLeg("warm_discard", built)
-        // appended vectors use a DIFFERENT seed than the serve queries —
-        // reusing synthVec here would make every appended vector an exact
-        // clone of a query (both derive from rate values starting at 0),
-        // turning the grown-tail phases into a degenerate self-match
-        // workload the empty-tail phase never sees (same discipline as the
-        // admission twin's 'm'-vs-'w' vocab split)
-        val appender = AnnStreams.appendStream(
-          spark.readStream.format("rate").option("rowsPerSecond", 10)
-            .option("numPartitions", 1).load()
-            .select((col("value") + lit(stride)).as("vec_id"),
-              synthVecSeeded(137).as("embedding")),
-          built, "vec_id", "embedding", s"$outRoot/$name-appendckpt",
-          trigger = maintTrigger)
+        serve(s"${name}_warm_discard", fam, built)
+        val appender = fam.appendStream(built, s"$outRoot/$name-appendckpt")
         try {
-          val mA = serveLeg("empty_tail", built)
-          val grown = AnnStreams.openServingIndex(spark, idxDir)
-          val tailAtReopen = grown.appends.count()
-          val mB = serveLeg("grown_tail", grown)
-          // the settled-vs-compacted comparison must hold the VECTOR
-          // POPULATION fixed (an earlier cut compared a 2.6k-vector tail
-          // phase against a 3.2k-vector compacted base and read corpus
-          // growth as compaction cost) — stop the writer, reopen, measure
-          // the final tail, compact the SAME rows, measure again
+          val mA = serve(s"${name}_empty_tail", fam, built)
+          val grown = fam.open(idxDir)
+          val tailAtReopen = fam.tailRows(grown)
+          val mB = serve(s"${name}_grown_tail", fam, grown)
+          // the settled-vs-compacted comparison must hold the POPULATION
+          // fixed (an earlier cut compared a 2.6k-vector tail phase against
+          // a 3.2k-vector compacted base and read corpus growth as
+          // compaction cost) — stop the writer, reopen, measure the final
+          // tail, compact the SAME rows, measure again
           appender.stop()
-          val settled = AnnStreams.openServingIndex(spark, idxDir)
-          val tailSettled = settled.appends.count()
-          val mB2 = serveLeg("settled_tail", settled)
-          val tC = System.nanoTime()
-          val compacted = AnnStreams.compactIndex(spark, idxDir, s"$idxDir-compact")
-          val compactSec = (System.nanoTime() - tC) / 1e9
-          val mC = serveLeg("post_compact", compacted)
-          Seq(mA, mB, mB2, mC,
-            s""""${name}_index_build_s":${"%.1f".format(idxSec)}""",
-            s""""${name}_tail_rows_at_reopen":$tailAtReopen""",
-            s""""${name}_tail_rows_settled":$tailSettled""",
-            s""""${name}_rows_compacted":${compacted.cells.count()}""",
-            s""""${name}_compact_s":${"%.1f".format(compactSec)}""")
-        } finally if (appender.isActive) appender.stop()
-      }
-    def admMaintLeg(name: String): Seq[String] =
-      if (!wanted(name)) Seq.empty else {
-        import graft.streaming.DedupStreams
-        val (idx, idxSec) = buildIndex(s"$name-idx", corpus)
-        val synthText = synthTextSeeded("w", 31)
-        def serveLeg(phase: String, i: DedupStreams.AdmissionIndex): String =
-          measure(s"${name}_$phase",
-            rate => DedupStreams.nearDupAdmission(
-              rate.select(col("value").as("doc_id"), col("timestamp").as("ts"),
-                synthText.as("text")),
-              i, "doc_id", "ts", "text", watermarkDelay = "10 seconds"),
-            "append", rowsPerBatch = admRowsPerBatch)
-        // JIT/codegen warm-up through the batch twin (identical plan) —
-        // same reasoning as the ANN maintenance leg
-        DedupStreams.nearDupAdmissionBatch(
-          spark.range(5000).select(col("id").as("value"))
-            .select(col("value").as("doc_id"),
-              lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts"),
-              synthText.as("text")),
-          idx, "doc_id", "ts", "text").count()
-        // ~20 docs/s: ~900 documents over phases A+B at the 45 s default —
-        // an 18%-of-corpus tail for the 5k sf0.1 corpus
-        // same discarded ramp phase as the ANN maintenance leg
-        serveLeg("warm_discard", idx)
-        val appender = DedupStreams.appendToIndex(
-          spark.readStream.format("rate").option("rowsPerSecond", 20)
-            .option("numPartitions", 1).load()
-            .select((col("value") + lit(corpusStride * 100)).as("doc_id"),
-              synthTextSeeded("m", 53).as("text")),
-          idx, "doc_id", "text", s"$outRoot/$name-appendckpt",
-          trigger = maintTrigger)
-        try {
-          val mA = serveLeg("empty_tail", idx)
-          val grown = DedupStreams.openAdmissionIndex(spark, idx.dir)
-          val tailAtReopen = grown.setsAppends.count()
-          val mB = serveLeg("grown_tail", grown)
-          // same fixed-population discipline as the ANN maintenance leg
-          appender.stop()
-          val settled = DedupStreams.openAdmissionIndex(spark, idx.dir)
-          val tailSettled = settled.setsAppends.count()
-          val mB2 = serveLeg("settled_tail", settled)
-          val tC = System.nanoTime()
-          val compacted = DedupStreams.compactAdmissionIndex(
-            spark, idx.dir, s"${idx.dir}-compact")
-          val compactSec = (System.nanoTime() - tC) / 1e9
-          val mC = serveLeg("post_compact", compacted)
-          Seq(mA, mB, mB2, mC,
-            s""""${name}_index_build_s":${"%.1f".format(idxSec)}""",
-            s""""${name}_tail_rows_at_reopen":$tailAtReopen""",
-            s""""${name}_tail_rows_settled":$tailSettled""",
-            s""""${name}_rows_compacted":${compacted.sets.count()}""",
-            s""""${name}_compact_s":${"%.1f".format(compactSec)}""")
+          val settled = fam.open(idxDir)
+          val tailSettled = fam.tailRows(settled)
+          val mB2 = serve(s"${name}_settled_tail", fam, settled)
+          val (compacted, compactSec) = timed(fam.compact(idxDir, s"$idxDir-compact"))
+          val mC = serve(s"${name}_post_compact", fam, compacted)
+          Seq(mA, mB, mB2, mC) ++ Seq(
+            "index_build_s" -> idxSec,
+            "tail_rows_at_reopen" -> tailAtReopen,
+            "tail_rows_settled" -> tailSettled,
+            "rows_compacted" -> fam.rows(compacted),
+            "compact_s" -> compactSec).map(field(name, _))
         } finally if (appender.isActive) appender.stop()
       }
     // RETRAIN UNDER LOAD (r17): blue/green's operational claim is that a
@@ -352,34 +261,14 @@ object StreamBench {
     def annRetrainLeg(name: String): Seq[String] =
       if (!wanted(name)) Seq.empty else {
         import graft.streaming.AnnStreams
-        val e = spark.read.parquet(s"$corpusDir/embeddings.parquet")
-          .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
-        val stride = e.agg(max(col("vec_id"))).head().getLong(0) + 1
+        val fam = floatFamily
         val idxDir = s"$outRoot/$name-idx"
-        val built = AnnStreams.buildServingIndex(e, "vec_id", "embedding",
-          idxDir, nlist = 64)
-        AnnStreams.landAppendBatch(
-          e.filter(col("vec_id") % 10 === 0)
-            .select((col("vec_id") + lit(stride)).as("vec_id"),
-              reverse(col("embedding")).as("embedding")),
-          built, "vec_id", "embedding", batchId = 0L)
-        val blue = AnnStreams.openServingIndex(spark, idxDir)
-        def serveLeg(phase: String, idx: AnnStreams.ServingIndex): String =
-          measure(s"${name}_$phase",
-            rate => AnnStreams.annServe(
-              rate.select(col("value").as("query_id"), col("timestamp").as("ts"),
-                synthVec.as("embedding")),
-              idx, "query_id", "ts", "embedding", k = 10, nprobe = 4,
-              watermarkDelay = "10 seconds"),
-            "append", rowsPerBatch = admRowsPerBatch)
-        AnnStreams.annServeBatch(
-          spark.range(5000).select(col("id").as("value"))
-            .select(col("value").as("query_id"),
-              lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts"),
-              synthVec.as("embedding")),
-          blue, "query_id", "ts", "embedding", k = 10, nprobe = 4).count()
-        serveLeg("warm_discard", blue)
-        val mSolo = serveLeg("solo", blue)
+        val built = fam.build(1, idxDir)
+        fam.landDrift(driftPlant(annCorpus), built)
+        val blue = fam.open(idxDir)
+        warm(fam, blue)
+        serve(s"${name}_warm_discard", fam, blue)
+        val mSolo = serve(s"${name}_solo", fam, blue)
         @volatile var stopRetrains = false
         @volatile var nRetrains = 0
         @volatile var retrainSecs = 0.0
@@ -417,7 +306,7 @@ object StreamBench {
         })
         retrainer.setDaemon(true)
         retrainer.start()
-        val mDuring = serveLeg("during_retrain", blue)
+        val mDuring = serve(s"${name}_during_retrain", fam, blue)
         stopRetrains = true
         // UNBOUNDED join: the in-flight retrain is a normal Spark job and
         // WILL finish — returning early (a timed join) would let the
@@ -434,81 +323,54 @@ object StreamBench {
           s"$name: retrainer thread died mid-window after $nRetrains " +
             s"retrains — during_retrain is a partial-overlap measurement, " +
             s"not a co-location receipt: $retrainErr")
-        val green =
-          AnnStreams.openServingIndex(spark, s"$outRoot/$name-green-${nRetrains - 1}")
-        val mAfter = serveLeg("on_retrained", green)
-        Seq(mSolo, mDuring, mAfter,
-          s""""${name}_scheduled_nlist":$schedNlist""",
-          s""""${name}_retrains_completed":$nRetrains""",
-          s""""${name}_retrain_avg_s":${"%.1f".format(
-            if (nRetrains > 0) retrainSecs / nRetrains else -1.0)}""",
-          s""""${name}_corpus_rows":${green.cells.count()}""")
+        val green = fam.open(s"$outRoot/$name-green-${nRetrains - 1}")
+        val mAfter = serve(s"${name}_on_retrained", fam, green)
+        Seq(mSolo, mDuring, mAfter) ++ Seq(
+          "scheduled_nlist" -> schedNlist,
+          "retrains_completed" -> nRetrains,
+          "retrain_avg_s" -> (if (nRetrains > 0) retrainSecs / nRetrains else -1.0),
+          "corpus_rows" -> fam.rows(green)).map(field(name, _))
       }
     // POLICY-DRIVEN MAINTENANCE UNDER LOAD (r17 verdict #6): the scheduling
     // layer's pieces — indexHealth, maintenanceDue, scheduledNlist,
     // retrainIndex — demonstrated as ONE operational loop rather than
-    // oracled components. A maintenance thread polls indexHealth on a
-    // cadence and acts ONLY when maintenanceDue fires, retraining at the
-    // scheduled sqrt-N geometry; serving never pauses. Three phases, each
-    // a full measured window against the live handle:
+    // oracled components. A maintenance thread polls the family's health
+    // on a cadence and acts ONLY when its due flags fire, retraining at
+    // the scheduled sqrt-N geometry (re-indexing, for admission, with the
+    // hot order recomputed over base ∪ tail); serving never pauses. Three
+    // phases, each a full measured window against the live handle:
     //  - `healthy`: empty tail — the poller must observe and NOT act;
-    //  - `drifted`: a 10%-of-corpus reversed-vector tail lands through the
-    //    real append path mid-leg; the poller detects it, fires exactly
-    //    one retrain into green, verifies green's health, and swaps its
-    //    own polling target (green must never re-fire);
-    //  - `on_green`: serving against the retrained index.
-    // The receipt is the causal chain t(drift) < t(due) < t(retrain done)
+    //  - `drifted`: a planted tail lands through the real append path
+    //    mid-leg; the poller detects it, fires exactly one act into green,
+    //    verifies green's health, and swaps its own polling target (green
+    //    must never re-fire);
+    //  - `on_green`: serving against the acted-on index.
+    // The receipt is the causal chain t(drift) < t(due) < t(act done)
     // plus q/s per phase and the poll/act counters.
-    // The loop is FAMILY-GENERIC: one implementation drives the float and
-    // the int8-quantized serving indexes through the identical policy
-    // (maintenanceDue / scheduledNlist read the same health schema for
-    // both families by design), so the two receipts differ only in what
-    // the family's own build/serve/retrain cost — not in loop structure.
-    final case class ServingFamily[I](
-        build: String => I,
-        open: String => I,
-        policy: graft.streaming.Maintenance.Family,
-        serveStream: (DataFrame, I) => DataFrame,
-        serveBatch: (DataFrame, I) => DataFrame,
-        landDrift: (DataFrame, I) => Unit,
-        nlistOf: I => Int,
-        rowsOf: I => Long)
-    lazy val annCorpus = spark.read.parquet(s"$corpusDir/embeddings.parquet")
-      .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
+    // The loop is FAMILY-GENERIC: one implementation drives the float, the
+    // int8-quantized and the admission indexes through the identical policy
+    // (the due decisions read each family's health schema by design). One
+    // asymmetry, priced honestly: an admission health poll explodes every
+    // stored shingle (a corpus scan per poll), so the polling cadence
+    // itself is the realistic maintenance cost — reported as polls over the
+    // window, with a longer act deadline.
     // The poller implements the CANONICAL decision rule in full —
     // `if (retrainDue) retrain(scheduledNlist) else if (compactDue)
     // compact` — and each scenario differs only in the planted tail:
-    // a reversed-vector drift cluster fires the retrain branch, an
-    // in-distribution 20% tail fires compaction alone (its assignment
-    // cosine matches the base, so the drift gate stays silent). The leg
-    // REQUIRES the branch the plant was designed to fire — a compaction
-    // that masks drift, or a retrain triggered by healthy growth, both
-    // fail loudly.
-    def servingPolicyLeg[I](name: String, fam: ServingFamily[I],
-        plant: (DataFrame, Long) => DataFrame,
-        expectAct: String): Seq[String] =
+    // a drift cluster fires the retrain branch, an in-distribution 20%
+    // tail fires compaction alone. The leg REQUIRES the branch the plant
+    // was designed to fire — a compaction that masks drift, or a retrain
+    // triggered by healthy growth, both fail loudly.
+    def policyLeg[I](name: String, fam: ServingFamily[I],
+        plant: DataFrame => DataFrame, expectAct: String): Seq[String] =
       if (!wanted(name)) Seq.empty else {
-        import graft.streaming.AnnStreams
-        val e = annCorpus
-        val stride = e.agg(max(col("vec_id"))).head().getLong(0) + 1
+        import graft.streaming.Maintenance
         val idxDir = s"$outRoot/$name-idx"
         val greenDir = s"$outRoot/$name-green"
-        val built = fam.build(idxDir)
+        val (built, idxSec) = timed(fam.build(1, idxDir))
         val blue = fam.open(idxDir)
-        def serveLeg(phase: String, idx: I): String =
-          measure(s"${name}_$phase",
-            rate => fam.serveStream(
-              rate.select(col("value").as("query_id"), col("timestamp").as("ts"),
-                synthVec.as("embedding")),
-              idx),
-            "append", rowsPerBatch = admRowsPerBatch)
-        fam.serveBatch(
-          spark.range(5000).select(col("id").as("value"))
-            .select(col("value").as("query_id"),
-              lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts"),
-              synthVec.as("embedding")),
-          blue).count()
-        serveLeg("warm_discard", blue)
+        warm(fam, blue)
+        serve(s"${name}_warm_discard", fam, blue)
         val t0 = System.nanoTime()
         def secs(t: Long): Double = (t - t0) / 1e9
         @volatile var stopPolling = false
@@ -525,7 +387,8 @@ object StreamBench {
               // each poll is one LIBRARY tick against a fresh open (serve
               // handles bind the tail at open time); the bench only
               // timestamps and counts — the decision, the act, and the
-              // post-act health require all live in Maintenance.tick
+              // post-act health require all live in Maintenance.tick.
+              // After the act, green is health-checked, never acted on.
               polls += 1
               if (acted) {
                 pollsAfterSwap += 1
@@ -533,13 +396,12 @@ object StreamBench {
                 require(!due.retrainDue && !due.compactDue,
                   s"$name: green re-fired maintenance after the swap")
               } else {
-                import graft.streaming.Maintenance
                 Maintenance.tick(spark, fam.policy, idxDir, greenDir,
                   onDue = () => tDueFired = System.nanoTime()) match {
                   case Maintenance.NoOp(_) => ()
                   case a =>
                     actTaken = a match {
-                      case _: Maintenance.Retrained => "retrain"
+                      case _: Maintenance.Retrained => fam.act
                       case _ => "compact"
                     }
                     tActDone = System.nanoTime()
@@ -553,18 +415,19 @@ object StreamBench {
         })
         poller.setDaemon(true)
         poller.start()
-        val mHealthy = serveLeg("healthy", blue)
+        val mHealthy = serve(s"${name}_healthy", fam, blue)
         require(tDueFired < 0L,
           s"$name: maintenance fired on a healthy index (poll bug or plant leak)")
         val healthyPolls = polls
         // the tail lands mid-run through the REAL append path; the plant
         // decides which maintenance branch it must fire
+        val drift = plant(fam.corpus)
         val tDrift = System.nanoTime()
-        fam.landDrift(plant(e, stride), built)
+        val driftKeys = fam.landDrift(drift, built)
         // serving keeps running on blue while the poller detects and acts
-        val mDrifted = serveLeg("drifted", blue)
+        val mDrifted = serve(s"${name}_drifted", fam, blue)
         // bounded wait: the act must complete near the window, not hang
-        val deadline = System.nanoTime() + 60L * 1000000000L
+        val deadline = System.nanoTime() + fam.actDeadlineS * 1000000000L
         while (tActDone < 0L && maintErr == null &&
             System.nanoTime() < deadline) Thread.sleep(200)
         require(maintErr == null, s"$name: maintenance thread died: $maintErr")
@@ -580,7 +443,7 @@ object StreamBench {
         // poller never stops) — its in-thread require pins that green
         // NEVER re-fires maintenance; we demand it actually polled
         val green = fam.open(greenDir)
-        val mGreen = serveLeg("on_green", green)
+        val mGreen = serve(s"${name}_on_green", fam, green)
         val deadline2 = System.nanoTime() + 60L * 1000000000L
         while (pollsAfterSwap < 1 && maintErr == null &&
             System.nanoTime() < deadline2) Thread.sleep(200)
@@ -589,217 +452,177 @@ object StreamBench {
         require(maintErr == null, s"$name: maintenance thread died: $maintErr")
         require(pollsAfterSwap >= 1,
           s"$name: green was never health-polled after the swap")
-        Seq(mHealthy, mDrifted, mGreen,
-          s""""${name}_act":"$actTaken"""",
-          s""""${name}_t_drift_s":${"%.1f".format(secs(tDrift))}""",
-          s""""${name}_t_due_s":${"%.1f".format(secs(tDueFired))}""",
-          s""""${name}_t_act_done_s":${"%.1f".format(secs(tActDone))}""",
-          s""""${name}_polls":$polls""",
-          s""""${name}_polls_healthy":$healthyPolls""",
-          s""""${name}_polls_after_swap":$pollsAfterSwap""",
-          s""""${name}_green_nlist":${fam.nlistOf(green)}""",
-          s""""${name}_corpus_rows":${fam.rowsOf(green)}""")
+        Seq(mHealthy, mDrifted, mGreen) ++ (Seq(
+          "act" -> actTaken,
+          "t_drift_s" -> secs(tDrift),
+          "t_due_s" -> secs(tDueFired),
+          "t_act_done_s" -> secs(tActDone),
+          "polls" -> polls,
+          "polls_healthy" -> healthyPolls,
+          "polls_after_swap" -> pollsAfterSwap) ++ driftKeys ++
+          fam.policyKeys(idxSec, green)).map(field(name, _))
       }
-    // the two plants: a 10% reversed-vector cluster (drifted — must fire
+    // the vector plants: a 10% reversed-vector cluster (drifted — must fire
     // the retrain branch) and a 20% verbatim-copy tail (in-distribution
     // growth — must fire compaction ALONE: its assignment cosines equal
     // the base's, so the drift gate stays silent while the tail-fraction
     // budget trips)
-    def driftPlant(e: DataFrame, stride: Long): DataFrame =
+    def driftPlant(e: DataFrame): DataFrame = {
+      val stride = ScaleStress.idStride(e, "vec_id")
       e.filter(col("vec_id") % 10 === 0)
         .select((col("vec_id") + lit(stride)).as("vec_id"),
           reverse(col("embedding")).as("embedding"))
-    def growthPlant(e: DataFrame, stride: Long): DataFrame =
+    }
+    def growthPlant(e: DataFrame): DataFrame = {
+      val stride = ScaleStress.idStride(e, "vec_id")
       e.filter(col("vec_id") % 5 === 0)
-        .select((col("vec_id") + lit(stride)).as("vec_id"),
-          col("embedding"))
-    lazy val floatFamily = {
-      import graft.streaming.AnnStreams
-      ServingFamily[AnnStreams.ServingIndex](
-        build = dir => AnnStreams.buildServingIndex(
-          annCorpus, "vec_id", "embedding", dir, nlist = 64),
-        open = dir => AnnStreams.openServingIndex(spark, dir),
-        policy = graft.streaming.Maintenance.FloatIvf,
-        serveStream = (arrivals, i) => AnnStreams.annServe(
-          arrivals, i, "query_id", "ts", "embedding", k = 10, nprobe = 4,
-          watermarkDelay = "10 seconds"),
-        serveBatch = (arrivals, i) => AnnStreams.annServeBatch(
-          arrivals, i, "query_id", "ts", "embedding", k = 10, nprobe = 4),
-        landDrift = (drift, i) => AnnStreams.landAppendBatch(
-          drift, i, "vec_id", "embedding", batchId = 0L),
-        nlistOf = _.nlist,
-        rowsOf = _.cells.count())
+        .select((col("vec_id") + lit(stride)).as("vec_id"), col("embedding"))
     }
-    lazy val quantizedFamily = {
-      import graft.streaming.AnnStreams
-      ServingFamily[AnnStreams.QuantizedIndex](
-        build = dir => AnnStreams.buildQuantizedIndex(
-          annCorpus, "vec_id", "embedding", dir, nlist = 64),
-        open = dir => AnnStreams.openQuantizedIndex(spark, dir),
-        policy = graft.streaming.Maintenance.QuantizedIvf,
-        serveStream = (arrivals, i) => AnnStreams.annServeQuantized(
-          arrivals, i, "query_id", "ts", "embedding", k = 10, nprobe = 4,
-          refine = 4, watermarkDelay = "10 seconds"),
-        serveBatch = (arrivals, i) => AnnStreams.annServeQuantizedBatch(
-          arrivals, i, "query_id", "ts", "embedding", k = 10, nprobe = 4,
-          refine = 4),
-        landDrift = (drift, i) => AnnStreams.landQuantizedAppendBatch(
-          drift, i, "vec_id", "embedding", batchId = 0L),
-        nlistOf = _.nlist,
-        rowsOf = _.cellsQ.count())
-    }
-    def annPolicyLeg(name: String): Seq[String] =
-      servingPolicyLeg(name, floatFamily, driftPlant, "retrain")
-    def qannPolicyLeg(name: String): Seq[String] =
-      servingPolicyLeg(name, quantizedFamily, driftPlant, "retrain")
-    def annPolicyCompactLeg(name: String): Seq[String] =
-      servingPolicyLeg(name, floatFamily, growthPlant, "compact")
-    def qannPolicyCompactLeg(name: String): Seq[String] =
-      servingPolicyLeg(name, quantizedFamily, growthPlant, "compact")
-    // POLICY-DRIVEN MAINTENANCE, ADMISSION FAMILY: the same closed loop as
-    // annpolicy for the dedup-at-the-door index — admissionHealth polled on
-    // a cadence, acting ONLY when maintenanceDueAdmission fires, with the
-    // drift landed mid-leg through the real append path (the x210/
-    // ScaleStress plant: a boilerplate head the build-time hot order has
-    // never ranked, so the tail's unranked-pair mass goes quadratic in the
-    // cluster). Same three measured phases and the same causal-chain
-    // receipt; the act is a blue/green reindexAdmission (hot order
-    // recomputed over base ∪ tail), after which the poller tracks green
-    // and must observe it healthy. One asymmetry vs annpolicy, priced
-    // honestly: an admission health poll explodes every stored shingle
-    // (a corpus scan per poll), so the polling cadence itself is the
-    // realistic maintenance cost — reported as polls over the window.
-    // Same plant-decides-the-branch discipline as the serving loop: the
-    // boilerplate drift cluster must fire re-index; a 20% verbatim-copy
-    // tail (its shingles are the base's — ranked — so unranked mass stays
-    // ~zero) must fire compaction alone.
-    def admPolicyLeg(name: String, plant: Long => DataFrame,
-        expectAct: String): Seq[String] =
-      if (!wanted(name)) Seq.empty else {
-        import graft.streaming.DedupStreams
-        val (built, idxSec) = buildIndex(s"$name-idx", corpus)
-        val idxDir = built.dir
-        val greenDir = s"$outRoot/$name-green"
-        val synthText = synthTextSeeded("w", 31)
-        def serveLeg(phase: String, i: DedupStreams.AdmissionIndex): String =
-          measure(s"${name}_$phase",
-            rate => DedupStreams.nearDupAdmission(
-              rate.select(col("value").as("doc_id"), col("timestamp").as("ts"),
-                synthText.as("text")),
-              i, "doc_id", "ts", "text", watermarkDelay = "10 seconds"),
-            "append", rowsPerBatch = admRowsPerBatch)
-        DedupStreams.nearDupAdmissionBatch(
-          spark.range(5000).select(col("id").as("value"))
-            .select(col("value").as("doc_id"),
-              lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts"),
-              synthText.as("text")),
-          built, "doc_id", "ts", "text").count()
-        serveLeg("warm_discard", built)
-        val t0 = System.nanoTime()
-        def secs(t: Long): Double = (t - t0) / 1e9
-        @volatile var stopPolling = false
-        @volatile var polls = 0
-        @volatile var pollsAfterSwap = 0
-        @volatile var tDueFired = -1L
-        @volatile var tActDone = -1L
-        @volatile var actTaken = ""
-        @volatile var maintErr: Throwable = null
-        val poller = new Thread(() => {
-          try {
-            import graft.streaming.Maintenance
-            var acted = false
-            while (!stopPolling) {
-              // same shape as the serving pollers: one library tick per
-              // poll pre-swap, a health check (never an act) on green after
-              polls += 1
-              if (acted) {
-                pollsAfterSwap += 1
-                val due = Maintenance.Admission.due(
-                  Maintenance.Admission.health(spark, greenDir))
-                require(!due.retrainDue && !due.compactDue,
-                  s"$name: green re-fired maintenance after the swap")
-              } else {
-                Maintenance.tick(spark, Maintenance.Admission, idxDir, greenDir,
-                  onDue = () => tDueFired = System.nanoTime()) match {
-                  case Maintenance.NoOp(_) => ()
-                  case a =>
-                    actTaken = a match {
-                      case _: Maintenance.Retrained => "reindex"
-                      case _ => "compact"
-                    }
-                    tActDone = System.nanoTime()
-                    acted = true
-                }
-              }
-              Thread.sleep(2000)
-            }
-            require(acted, s"$name: poller never acted — drift was not detected")
-          } catch { case t: Throwable => maintErr = t }
-        })
-        poller.setDaemon(true)
-        poller.start()
-        val mHealthy = serveLeg("healthy", built)
-        require(tDueFired < 0L,
-          s"$name: maintenance fired on a healthy admission index")
-        val healthyPolls = polls
-        val plantDf = plant(corpusStride).localCheckpoint()
-        val nDrift = plantDf.count()
-        val tDrift = System.nanoTime()
-        DedupStreams.landAppendBatch(
-          plantDf, built, "doc_id", "text", batchId = 0L)
-        val mDrifted = serveLeg("drifted", built)
-        val deadline = System.nanoTime() + 120L * 1000000000L
-        while (tActDone < 0L && maintErr == null &&
-            System.nanoTime() < deadline) Thread.sleep(200)
-        require(maintErr == null, s"$name: maintenance thread died: $maintErr")
-        require(tActDone > 0L,
-          s"$name: tail landed but no maintenance act completed within the window")
-        require(actTaken == expectAct,
-          s"$name: wrong maintenance branch fired: " +
-            s"expected $expectAct, got $actTaken")
-        require(tDrift < tDueFired && tDueFired < tActDone,
-          s"$name: causal chain broken: drift=${secs(tDrift)}s " +
-            s"due=${secs(tDueFired)}s done=${secs(tActDone)}s")
-        val green = DedupStreams.openAdmissionIndex(spark, greenDir)
-        val mGreen = serveLeg("on_green", green)
-        val deadline2 = System.nanoTime() + 60L * 1000000000L
-        while (pollsAfterSwap < 1 && maintErr == null &&
-            System.nanoTime() < deadline2) Thread.sleep(200)
-        stopPolling = true
-        poller.join(15000)
-        require(maintErr == null, s"$name: maintenance thread died: $maintErr")
-        require(pollsAfterSwap >= 1,
-          s"$name: green was never health-polled after the swap")
-        Seq(mHealthy, mDrifted, mGreen,
-          s""""${name}_act":"$actTaken"""",
-          s""""${name}_index_build_s":${"%.1f".format(idxSec)}""",
-          s""""${name}_t_drift_s":${"%.1f".format(secs(tDrift))}""",
-          s""""${name}_t_due_s":${"%.1f".format(secs(tDueFired))}""",
-          s""""${name}_t_act_done_s":${"%.1f".format(secs(tActDone))}""",
-          s""""${name}_polls":$polls""",
-          s""""${name}_polls_healthy":$healthyPolls""",
-          s""""${name}_polls_after_swap":$pollsAfterSwap""",
-          s""""${name}_drift_docs":$nDrift""",
-          s""""${name}_green_docs":${green.sets.count()}""")
-      }
-    // the boilerplate drift cluster: 10% of corpus, every doc headed by
-    // the same 9-token boilerplate the base hot order has never seen —
-    // its shingles stay unranked under the stale order, so mass goes
-    // ~C(f,2) per shared shingle (the x210 plant)
-    def admDriftPlant(stride: Long): DataFrame =
-      spark.range(corpus.count() / 10).select(
+    // the admission plants. The boilerplate drift cluster (the x210/
+    // ScaleStress plant): 10% of corpus, every doc headed by the same
+    // 9-token boilerplate the base hot order has never seen — its shingles
+    // stay unranked under the stale order, so mass goes ~C(f,2) per shared
+    // shingle and the act is a blue/green re-index
+    def admDriftPlant(c: DataFrame): DataFrame = {
+      val stride = ScaleStress.idStride(c, "doc_id")
+      spark.range(c.count() / 10).select(
         (col("id") + lit(stride * 7)).as("doc_id"),
         concat(
           lit("standard corporate disclaimer header applies to this entire document "),
           expr("concat_ws(' ', transform(sequence(0, 19), " +
             "i -> concat('dw', pmod(hash(id * 37 + i), 100000))))"))
           .as("text"))
+    }
     // in-distribution growth: 20% verbatim copies — their shingles are
     // the base's own (ranked), so unranked mass stays ~zero while the
     // tail-fraction budget trips
-    def admGrowthPlant(stride: Long): DataFrame =
-      corpus.filter(col("doc_id") % 5 === 0)
+    def admGrowthPlant(c: DataFrame): DataFrame = {
+      val stride = ScaleStress.idStride(c, "doc_id")
+      c.filter(col("doc_id") % 5 === 0)
         .select((col("doc_id") + lit(stride * 7)).as("doc_id"), col("text"))
+    }
+    // nlist scales ~sqrt(N), the standard IVF sizing: candidates per
+    // query (nprobe·N/nlist) then grow ~sqrt(corpus) instead of
+    // linearly — a fixed nlist at 10× the corpus probed 10× the
+    // vectors per query and paid ~3× throughput for it (measured)
+    def nlistFor(replicas: Int): Int = math.max(1, (64 * math.sqrt(replicas.toDouble)).round.toInt)
+    def vectorReplicas(replicas: Int): DataFrame =
+      ScaleStress.replicated(annCorpus, "vec_id", replicas)(_ => Seq(col("embedding")))
+    // ANN serving: the sf embeddings table indexed with a trained quantizer
+    // (the production mode), serving synthesized dim-64 query vectors
+    def vectorArrivals(rate: DataFrame): DataFrame =
+      rate.select(col("value").as("query_id"), col("timestamp").as("ts"),
+        synthVecSeeded(131).as("embedding"))
+    // ~10 vec/s on a 2 s trigger: ~450 vectors over phases A+B at the
+    // 45 s default — a 20%-of-corpus tail in a handful of batch dirs.
+    // Appended vectors use a DIFFERENT seed than the serve queries —
+    // reusing the query seed here would make every appended vector an
+    // exact clone of a query (both derive from rate values starting at
+    // 0), turning the grown-tail phases into a degenerate self-match
+    // workload the empty-tail phase never sees (same discipline as the
+    // admission family's 'm'-vs-'w' vocab split). Cast to the index's
+    // float elements: the generator yields doubles, and a double tail file
+    // fails every later read of the tail.
+    def vectorAppends: DataFrame =
+      spark.readStream.format("rate").option("rowsPerSecond", 10)
+        .option("numPartitions", 1).load()
+        .select((col("value") + lit(ScaleStress.idStride(annCorpus, "vec_id"))).as("vec_id"),
+          synthVecSeeded(137).cast("array<float>").as("embedding"))
+    lazy val floatFamily = {
+      import graft.streaming.AnnStreams
+      ServingFamily[AnnStreams.ServingIndex](
+        corpus = annCorpus,
+        build = (r, dir) => AnnStreams.buildServingIndex(
+          vectorReplicas(r), "vec_id", "embedding", dir, nlist = nlistFor(r)),
+        open = dir => AnnStreams.openServingIndex(spark, dir),
+        arrivals = vectorArrivals,
+        serveStream = (arrivals, i) => AnnStreams.annServe(
+          arrivals, i, "query_id", "ts", "embedding", k = 10, nprobe = 4,
+          watermarkDelay = "10 seconds"),
+        serveBatch = (arrivals, i) => AnnStreams.annServeBatch(
+          arrivals, i, "query_id", "ts", "embedding", k = 10, nprobe = 4),
+        appendStream = (i, ckpt) => AnnStreams.appendStream(
+          vectorAppends, i, "vec_id", "embedding", ckpt, trigger = maintTrigger),
+        tailRows = _.appends.count(),
+        rows = _.cells.count(),
+        compact = (dir, to) => AnnStreams.compactIndex(spark, dir, to),
+        landDrift = (drift, i) => {
+          AnnStreams.landAppendBatch(drift, i, "vec_id", "embedding", batchId = 0L)
+          Seq.empty
+        },
+        policy = graft.streaming.Maintenance.FloatIvf,
+        act = "retrain",
+        actDeadlineS = 60L,
+        policyKeys = (_, g) => Seq("green_nlist" -> g.nlist, "corpus_rows" -> g.cells.count()))
+    }
+    lazy val quantizedFamily = {
+      import graft.streaming.AnnStreams
+      ServingFamily[AnnStreams.QuantizedIndex](
+        corpus = annCorpus,
+        build = (r, dir) => AnnStreams.buildQuantizedIndex(
+          vectorReplicas(r), "vec_id", "embedding", dir, nlist = nlistFor(r)),
+        open = dir => AnnStreams.openQuantizedIndex(spark, dir),
+        arrivals = vectorArrivals,
+        serveStream = (arrivals, i) => AnnStreams.annServeQuantized(
+          arrivals, i, "query_id", "ts", "embedding", k = 10, nprobe = 4,
+          refine = 4, watermarkDelay = "10 seconds"),
+        serveBatch = (arrivals, i) => AnnStreams.annServeQuantizedBatch(
+          arrivals, i, "query_id", "ts", "embedding", k = 10, nprobe = 4,
+          refine = 4),
+        appendStream = (i, ckpt) => AnnStreams.appendQuantizedStream(
+          vectorAppends, i, "vec_id", "embedding", ckpt, trigger = maintTrigger),
+        tailRows = _.cellsQAppends.count(),
+        rows = _.cellsQ.count(),
+        compact = (dir, to) => AnnStreams.compactQuantizedIndex(spark, dir, to),
+        landDrift = (drift, i) => {
+          AnnStreams.landQuantizedAppendBatch(drift, i, "vec_id", "embedding", batchId = 0L)
+          Seq.empty
+        },
+        policy = graft.streaming.Maintenance.QuantizedIvf,
+        act = "retrain",
+        actDeadlineS = 60L,
+        policyKeys = (_, g) => Seq("green_nlist" -> g.nlist, "corpus_rows" -> g.cellsQ.count()))
+    }
+    lazy val admissionFamily = {
+      import graft.streaming.DedupStreams
+      ServingFamily[DedupStreams.AdmissionIndex](
+        corpus = corpus,
+        // replicated corpus: per-replica suffix token, the ScaleStress
+        // construction
+        build = (r, dir) => DedupStreams.buildAdmissionIndex(
+          ScaleStress.replicated(corpus, "doc_id", r)(ScaleStress.suffixed),
+          "doc_id", "text", dir),
+        open = dir => DedupStreams.openAdmissionIndex(spark, dir),
+        arrivals = rate => rate.select(col("value").as("doc_id"),
+          col("timestamp").as("ts"), synthTextSeeded("w", 31).as("text")),
+        serveStream = (arrivals, i) => DedupStreams.nearDupAdmission(
+          arrivals, i, "doc_id", "ts", "text", watermarkDelay = "10 seconds"),
+        serveBatch = (arrivals, i) => DedupStreams.nearDupAdmissionBatch(
+          arrivals, i, "doc_id", "ts", "text"),
+        // ~20 docs/s: ~900 documents over phases A+B at the 45 s default —
+        // an 18%-of-corpus tail for the 5k sf0.1 corpus
+        appendStream = (i, ckpt) => DedupStreams.appendToIndex(
+          spark.readStream.format("rate").option("rowsPerSecond", 20)
+            .option("numPartitions", 1).load()
+            .select((col("value") + lit(ScaleStress.idStride(corpus, "doc_id") * 100))
+              .as("doc_id"), synthTextSeeded("m", 53).as("text")),
+          i, "doc_id", "text", ckpt, trigger = maintTrigger),
+        tailRows = _.setsAppends.count(),
+        rows = _.sets.count(),
+        compact = (dir, to) => DedupStreams.compactAdmissionIndex(spark, dir, to),
+        // materialized once: its row count is a receipt field, and the
+        // landing reads the same rows
+        landDrift = (drift, i) => {
+          val landed = drift.localCheckpoint()
+          val n = landed.count()
+          DedupStreams.landAppendBatch(landed, i, "doc_id", "text", batchId = 0L)
+          Seq("drift_docs" -> n)
+        },
+        policy = graft.streaming.Maintenance.Admission,
+        act = "reindex",
+        actDeadlineS = 120L,
+        policyKeys = (buildS, g) => Seq("index_build_s" -> buildS, "green_docs" -> g.sets.count()))
+    }
     val legs =
       (if (wanted("sessionize")) Seq(measure("sessionize",
         rate => graft.streaming.EventStreams.sessionize(
@@ -810,19 +633,19 @@ object StreamBench {
           rate.select(col("timestamp").as("ts"),
             concat(lit("t"), col("value") % 5).as("event_type"))),
         "update")) else Seq.empty) ++
-      admissionLeg("admission", "admidx", 1) ++
-      admissionLeg("admission_10x", "admidx10", 10) ++
-      annServeLeg("annserve", 1) ++
-      annServeLeg("annserve_10x", 10) ++
-      annMaintLeg("annmaint") ++
-      admMaintLeg("admmaint") ++
+      serveLeg("admission", admissionFamily, 1) ++
+      serveLeg("admission_10x", admissionFamily, 10) ++
+      serveLeg("annserve", floatFamily, 1) ++
+      serveLeg("annserve_10x", floatFamily, 10) ++
+      maintLeg("annmaint", floatFamily) ++
+      maintLeg("admmaint", admissionFamily) ++
       annRetrainLeg("annretrain") ++
-      annPolicyLeg("annpolicy") ++
-      qannPolicyLeg("qannpolicy") ++
-      annPolicyCompactLeg("annpolicyc") ++
-      qannPolicyCompactLeg("qannpolicyc") ++
-      admPolicyLeg("admpolicy", admDriftPlant, "reindex") ++
-      admPolicyLeg("admpolicyc", admGrowthPlant, "compact")
+      policyLeg("annpolicy", floatFamily, driftPlant, "retrain") ++
+      policyLeg("qannpolicy", quantizedFamily, driftPlant, "retrain") ++
+      policyLeg("annpolicyc", floatFamily, growthPlant, "compact") ++
+      policyLeg("qannpolicyc", quantizedFamily, growthPlant, "compact") ++
+      policyLeg("admpolicy", admissionFamily, admDriftPlant, "reindex") ++
+      policyLeg("admpolicyc", admissionFamily, admGrowthPlant, "compact")
     println(s"""{"offered_rows_per_s":$offeredRps,"run_seconds":$runSeconds,"n_users":$nUsers,"adm_rows_per_batch":$admRowsPerBatch,"cpus":$cpus,"corpus_docs":$nCorpus,${legs.mkString(",")}}""")
     spark.stop()
   }

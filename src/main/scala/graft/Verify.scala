@@ -1,8 +1,11 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus the [[writeLayout]] sidecars, for the driver's DuckDB compare. */
 object Verify {
+  /** The sidecar that names the queries a dump attempted. */
+  val Manifest = "manifest.json"
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args: run only these query names (local iteration)
@@ -24,20 +27,29 @@ object Verify {
         errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(500)
       }
     }
-    // JSON string escaping lives in [[Jsons.quote]] (shared with the
-    // ScaleStress sidecar writer so the rules can't drift apart).
-    def q(s: String): String = Jsons.quote(s)
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    Files.writeString(Paths.get(s"$outDir/errors.json"),
-      errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     // names this invocation attempted (an `only`-filtered local run attempts
     // a subset; selfcheck must not flag the rest as missing)
     val attempted = SparkEntry.queries.keys
       .filter(n => only.isEmpty || only(n)).toSeq.sorted
-    Files.writeString(Paths.get(s"$outDir/manifest.json"),
-      attempted.map(q).mkString("[", ",", "]"))
+    writeLayout(outDir, attempted, SparkEntry.oracleSql, errors)
     spark.stop()
+  }
+
+  /** The sidecars `tools/selfcheck.py` reads beside the dumped query dirs:
+    * `oracle_sql.json` (name → DuckDB SQL), [[Manifest]] (the attempted
+    * names) and `errors.json` (name → failure message). The one writer of
+    * this layout — Verify's and ScaleStress's dumps both go through it —
+    * with every string escaped by [[Jsons.quote]]. */
+  def writeLayout(outDir: String, attempted: Seq[String],
+      oracles: Iterable[(String, String)],
+      errors: Iterable[(String, String)] = Nil): Unit = {
+    def obj(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${Jsons.quote(k)}: ${Jsons.quote(v)}" }
+        .mkString("{", ",", "}")
+    new java.io.File(outDir).mkdirs()
+    Files.writeString(Paths.get(outDir, "oracle_sql.json"), obj(oracles))
+    Files.writeString(Paths.get(outDir, "errors.json"), obj(errors))
+    Files.writeString(Paths.get(outDir, Manifest),
+      attempted.map(Jsons.quote).mkString("[", ",", "]"))
   }
 }

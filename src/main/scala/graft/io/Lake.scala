@@ -95,17 +95,11 @@ object Lake {
   def readOrc(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     spark.read.orc(dir)
 
-  /** S7 — storage-mode resolution, the reference's `PIPELINE_STORAGE_MODE`
-    * switch (`storage_io.py:27-36`) mapped onto Hadoop FileSystem URIs:
-    * everything downstream is scheme-agnostic. */
-  def resolveBase(mode: String, localBase: String,
-      account: String = "", container: String = "", basePath: String = ""): String =
-    mode match {
-      case "local" => localBase
-      case "adls" =>
-        require(account.nonEmpty && container.nonEmpty, "adls mode needs account+container")
-        val suffix = if (basePath.isEmpty) "" else s"/$basePath"
-        s"abfss://$container@$account.dfs.core.windows.net$suffix"
+  /** The reference's `PIPELINE_STORAGE_MODE` switch (`storage_io.py:27-36`):
+    * `local` (the default) or `adls`; any other value is a config error. */
+  private def storageMode(env: Map[String, String]): String =
+    env.getOrElse("PIPELINE_STORAGE_MODE", "local").trim.toLowerCase match {
+      case mode @ ("local" | "adls") => mode
       case other => throw new IllegalArgumentException(s"unknown storage mode: $other")
     }
 
@@ -114,18 +108,23 @@ object Lake {
   private def accountOf(accountUrl: String): String =
     accountUrl.stripPrefix("https://").stripPrefix("http://").takeWhile(_ != '.')
 
-  /** The reference's full env contract (`storage_io.py:27-36`) resolved to a
-    * base URI: local mode reuses `ADLS_BASE_PATH` as a local prefix exactly
-    * like `read_bytes` does (`storage_io.py:80-93`). */
+  /** S7 — storage-mode resolution: the reference's full env contract
+    * (`storage_io.py:27-36`) mapped onto a Hadoop FileSystem base URI, so
+    * everything downstream is scheme-agnostic. Local mode reuses
+    * `ADLS_BASE_PATH` as a local prefix exactly like `read_bytes` does
+    * (`storage_io.py:80-93`); adls mode needs the account
+    * (`ADLS_ACCOUNT_URL`) and container (`ADLS_FILE_SYSTEM`). With none of
+    * the variables set, `localBase` comes back unchanged. */
   def resolveBaseFromEnv(env: Map[String, String], localBase: String): String = {
-    val mode = env.getOrElse("PIPELINE_STORAGE_MODE", "local").trim.toLowerCase
     val basePath = env.getOrElse("ADLS_BASE_PATH", "").strip.stripPrefix("/").stripSuffix("/")
-    mode match {
-      case "local" => if (basePath.isEmpty) localBase else s"$localBase/$basePath"
-      case "adls" => resolveBase("adls", localBase,
-        accountOf(env.getOrElse("ADLS_ACCOUNT_URL", "")),
-        env.getOrElse("ADLS_FILE_SYSTEM", ""), basePath)
-      case other => throw new IllegalArgumentException(s"unknown storage mode: $other")
+    val suffix = if (basePath.isEmpty) "" else s"/$basePath"
+    storageMode(env) match {
+      case "local" => localBase + suffix
+      case _ =>
+        val account = accountOf(env.getOrElse("ADLS_ACCOUNT_URL", ""))
+        val container = env.getOrElse("ADLS_FILE_SYSTEM", "")
+        require(account.nonEmpty && container.nonEmpty, "adls mode needs account+container")
+        s"abfss://$container@$account.dfs.core.windows.net$suffix"
     }
   }
 
@@ -142,9 +141,8 @@ object Lake {
     *    reference's optional `AZURE_CLIENT_ID` for user-assigned identity.
     * Returns the key→value map (unit-testable without an account); apply
     * with [[applyStorageAuth]]. Local mode returns empty. */
-  def adlsHadoopConf(env: Map[String, String]): Map[String, String] = {
-    val mode = env.getOrElse("PIPELINE_STORAGE_MODE", "local").trim.toLowerCase
-    if (mode != "adls") Map.empty
+  def adlsHadoopConf(env: Map[String, String]): Map[String, String] =
+    if (storageMode(env) != "adls") Map.empty
     else env.get("AZURE_STORAGE_CONNECTION_STRING").filter(_.nonEmpty) match {
       case Some(cs) =>
         val kv = cs.split(";").iterator.filter(_.contains("="))
@@ -167,7 +165,6 @@ object Lake {
           env.get("AZURE_CLIENT_ID").filter(_.nonEmpty)
             .map(id => s"fs.azure.account.oauth2.msi.client.id.$host" -> id)
     }
-  }
 
   /** Push the resolved auth keys into the live Hadoop configuration. */
   def applyStorageAuth(spark: org.apache.spark.sql.SparkSession,

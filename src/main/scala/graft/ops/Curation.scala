@@ -170,45 +170,11 @@ object Curation {
     perGroupCap(nearDeduped, sourceCol, idCol, maxPerSource)
   }
 
-  /** [[curateFlow]] plus per-stage row counts. The counted frames are cached
-    * before their count so the downstream stages (and the returned corpus)
-    * reuse them instead of recomputing the whole lineage per action. */
-  def curate(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      sourceCol: String = "source",
-      minStopRatio: Double = 0.0,
-      maxMeanWordLen: Double = 20.0,
-      allowedLangs: Seq[String] = Seq("en", "de", "es", "fr", "zh"),
-      maxPerSource: Int = 1000): (DataFrame, CurationStats) = {
-    val input = docs.count()
-
-    val afterQualityDf = docs.filter(qualityGate(textCol, minStopRatio, maxMeanWordLen))
-    val afterQuality = afterQualityDf.count()
-
-    val afterLangDf = afterQualityDf
-      .filter(graft.functions.Exprs.lang_id(col(textCol))
-        .isin(allowedLangs.map(x => x: Any): _*))
-      .cache()
-    val afterLang = afterLangDf.count()
-
-    val exactDeduped = Dedup.exactDedup(afterLangDf, idCol, textCol)
-    val nearDeduped = Dedup.minhashDedup(exactDeduped, idCol, textCol,
-      shingleK = 3, numHashes = 128, bands = 64, threshold = 0.5).cache()
-    val afterDedup = nearDeduped.count()
-
-    val capped = perGroupCap(nearDeduped, sourceCol, idCol, maxPerSource)
-    val afterCap = capped.count()
-
-    (capped, CurationStats(input, afterQuality, afterLang, afterDedup, afterCap))
-  }
-
-  /** [[curate]]'s stats in ONE action — the `Observation` spelling: every
-    * stage boundary gets a CollectMetrics node, so the counts accumulate
-    * DURING the single pass that materializes the corpus, instead of the
-    * five separate actions (five full lineage executions or a cache) the
-    * count-per-stage spelling pays. At 100 TB that is the difference
+  /** [[curateFlow]] plus per-stage row counts, in ONE action — the
+    * `Observation` spelling: every stage boundary gets a CollectMetrics
+    * node, so the counts accumulate DURING the single pass that
+    * materializes the corpus, instead of the five separate actions (five
+    * full lineage executions or a cache) a count-per-stage spelling pays. At 100 TB that is the difference
     * between one job and five.
     *
     * Returns the curated frame plus a stats thunk: run ANY full action on

@@ -55,13 +55,15 @@ class CurationSpec extends SparkSpec {
   }
 
   test("curate: stages are monotonically decreasing and report is consistent") {
-    val (curated, stats) = Curation.curate(docs, maxPerSource = 10)
+    val (curated, statsThunk) = Curation.curateObserved(docs, maxPerSource = 10)
+    val nCurated = curated.count()
+    val stats = statsThunk() // safe: the count above ran the action
     assert(stats.input == docs.count())
     assert(stats.afterQuality <= stats.input)
     assert(stats.afterLang <= stats.afterQuality)
     assert(stats.afterDedup <= stats.afterLang)
     assert(stats.afterCap <= stats.afterDedup)
-    assert(curated.count() == stats.afterCap)
+    assert(nCurated == stats.afterCap)
     assert(stats.afterCap > 0)
     // cap actually binds per source
     import spark.implicits._
@@ -342,13 +344,17 @@ class CurationSpec extends SparkSpec {
       (5L, "the quick brown fox is in the yard", "books"),
       (6L, "the quick brown fox is in the yard too", "books")
     ).toDF("doc_id", "text", "source")
-    val (multi, multiStats) = Curation.curate(docs, minStopRatio = 0.05, maxPerSource = 2)
+    // the per-stage counts a count-per-stage run reports on this fixture:
+    // 6 in, doc 3 quality-gated, all five pass the language gate, the
+    // exact dup 2 and the near-dup 6 dedup away, the cap of 2 keeps the rest
+    val countPerStage = Curation.CurationStats(6L, 5L, 5L, 3L, 3L)
+    val flow = Curation.curateFlow(docs, minStopRatio = 0.05, maxPerSource = 2)
     val (observedDf, statsThunk) =
       Curation.curateObserved(docs, minStopRatio = 0.05, maxPerSource = 2)
     val observedIds = observedDf.select($"doc_id").as[Long].collect().sorted.toSeq
     val observed = statsThunk() // safe: the collect above ran the action
-    assert(observed == multiStats, s"$observed vs $multiStats")
-    assert(observedIds == multi.select($"doc_id").as[Long].collect().sorted.toSeq)
+    assert(observed == countPerStage, s"$observed vs $countPerStage")
+    assert(observedIds == flow.select($"doc_id").as[Long].collect().sorted.toSeq)
     assert(observed.input == 6L && observed.afterQuality == 5L)
   }
 

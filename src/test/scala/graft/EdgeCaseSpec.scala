@@ -69,8 +69,8 @@ class EdgeCaseSpec extends SparkSpec {
     val one = Seq((7L, "only document here", "s", "en")).toDF("doc_id", "text", "source", "lang")
     assert(Dedup.minhashNearDupPairs(one, "doc_id", "text").count() == 0)
     assert(Dedup.exactDedup(one, "doc_id", "text").count() == 1)
-    val (curated, stats) = Curation.curate(one)
-    assert(curated.count() == 1 && stats.afterCap == 1)
+    val (curated, stats) = Curation.curateObserved(one)
+    assert(curated.count() == 1 && stats().afterCap == 1)
   }
 
   test("ANN with empty query set returns empty") {

@@ -87,15 +87,22 @@ class LakeSpec extends SparkSpec {
   }
 
   test("S7: storage-mode base resolution (local vs abfss URI)") {
-    assert(Lake.resolveBase("local", "/data/lake") == "/data/lake")
-    assert(Lake.resolveBase("adls", "", "acct", "cont", "edu") ==
+    def adls(container: String, basePath: String = "") = Map(
+      "PIPELINE_STORAGE_MODE" -> "adls",
+      "ADLS_ACCOUNT_URL" -> "https://acct.dfs.core.windows.net",
+      "ADLS_FILE_SYSTEM" -> container, "ADLS_BASE_PATH" -> basePath)
+    assert(Lake.resolveBaseFromEnv(Map("PIPELINE_STORAGE_MODE" -> "local"), "/data/lake")
+      == "/data/lake")
+    assert(Lake.resolveBaseFromEnv(adls("cont", "edu"), "") ==
       "abfss://cont@acct.dfs.core.windows.net/edu")
-    assert(Lake.resolveBase("adls", "", "acct", "cont") ==
+    assert(Lake.resolveBaseFromEnv(adls("cont"), "") ==
       "abfss://cont@acct.dfs.core.windows.net")
-    intercept[IllegalArgumentException](Lake.resolveBase("s3", "/x"))
-    intercept[IllegalArgumentException](Lake.resolveBase("adls", ""))
-    assert(Lake.path(Lake.resolveBase("local", "/base"), "silver", "housing", "2024-01-01")
-      == "/base/silver/housing/ingest_date=2024-01-01")
+    intercept[IllegalArgumentException](
+      Lake.resolveBaseFromEnv(Map("PIPELINE_STORAGE_MODE" -> "s3"), "/x"))
+    intercept[IllegalArgumentException](
+      Lake.resolveBaseFromEnv(Map("PIPELINE_STORAGE_MODE" -> "adls"), ""))
+    assert(Lake.path(Lake.resolveBaseFromEnv(Map.empty, "/base"), "silver", "housing",
+      "2024-01-01") == "/base/silver/housing/ingest_date=2024-01-01")
   }
 
   test("S7: env contract resolution mirrors storage_io.load_storage_config") {
